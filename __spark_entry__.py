@@ -54,6 +54,7 @@ from cocoindex_data_ingestion_spark.operators import (
     text_analysis,
     vector_search,
 )
+from cocoindex_data_ingestion_spark.memo import memo, scratch_dir
 from cocoindex_data_ingestion_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------- shared consts
@@ -99,9 +100,6 @@ def _qvec_df(emb: DataFrame) -> DataFrame:
     return emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
 
 
-_QVEC_CACHE: dict[tuple[str, str], list[float]] = {}
-
-
 def _qvec_vals(spark: SparkSession, sf_dir: str) -> list:
     """The query vector as driver-side floats, resolved once per
     (applicationId, sf_dir). Indexed search paths resolve the query
@@ -110,13 +108,10 @@ def _qvec_vals(spark: SparkSession, sf_dir: str) -> list:
     (a real service holds the request vector in memory; re-scanning
     the embeddings table per query only modeled the fixture, not the
     workload)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _QVEC_CACHE:
-        _QVEC_CACHE[key] = [
-            float(x)
-            for x in _qvec_df(_t(spark, sf_dir, "embeddings")).first()["qvec"]
-        ]
-    return _QVEC_CACHE[key]
+    return memo(spark, ("qvec", sf_dir), lambda: [
+        float(x)
+        for x in _qvec_df(_t(spark, sf_dir, "embeddings")).first()["qvec"]
+    ])
 
 
 def _qvec_local_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -233,7 +228,7 @@ def _register(name: str, sql: str | None):
     return deco
 
 
-# Prepared-plan cache for the SLO-compared hot search paths: a warm
+# Prepared-plan memo for the SLO-compared hot search paths: a warm
 # service prepares its hot statements once — DataFrames are immutable,
 # so returning the same frame re-EXECUTES the plan on every collect
 # while paying py4j construction + analysis once (measured ~0.3 s per
@@ -241,16 +236,11 @@ def _register(name: str, sql: str | None):
 # queries whose inputs are immutable per (SparkContext, sf_dir):
 # never to streaming/IVM/segmented-index paths, whose state mutates
 # between calls.
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _prepared(name: str):
     def deco(fn):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            key = (spark.sparkContext.applicationId, sf_dir, name)
-            if key not in _PLAN_CACHE:
-                _PLAN_CACHE[key] = fn(spark, sf_dir)
-            return _PLAN_CACHE[key]
+            return memo(spark, ("plan", sf_dir, name),
+                        lambda: fn(spark, sf_dir))
 
         wrapped.__doc__ = fn.__doc__
         wrapped.__name__ = fn.__name__
@@ -3552,13 +3542,11 @@ def _q_ivm_kmeans_online(spark: SparkSession, sf_dir: str) -> DataFrame:
     state; the oracle unrolls the same two stages, and equality IS
     the incremental-maintenance contract
     (clustering.OnlineKMeans)."""
-    import tempfile
-
     from cocoindex_data_ingestion_spark.operators import clustering
 
     emb = _t(spark, sf_dir, "embeddings")
     ok = clustering.OnlineKMeans(
-        spark, tempfile.mkdtemp(prefix="okmeans_"), k=_KMEANS_K
+        spark, scratch_dir(spark, "okmeans_"), k=_KMEANS_K
     )
     ok.refresh(emb.filter(F.col("vec_id") % 2 == 0))
     ok.refresh(emb.filter(F.col("vec_id") % 2 == 1))
@@ -4460,27 +4448,21 @@ def _q_chunk_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- prebuilt-index variants (production path; identical results/oracles) ----
 
-_INDEX_CACHE: dict[str, str] = {}
-
-
 def _ensure_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build the search index for this sf_dir once per process."""
-    import tempfile
-
+    """Build the search index for this sf_dir once per session."""
     from cocoindex_data_ingestion_spark.operators.indexing import (
         build_search_index,
     )
 
-    if sf_dir not in _INDEX_CACHE:
+    def build() -> str:
         # cold-bench hook (bench.py cold rows): a fresh process can be
         # pointed at a layout another process already built, so the
         # cold-session measurement prices the empty caches — listing,
         # analysis, codegen — not a redundant index build.
         ext = os.environ.get("SPARK_GRAFT_INDEX_DIR")
         if ext and os.path.isdir(ext):
-            _INDEX_CACHE[sf_dir] = ext
             return ext
-        idx = tempfile.mkdtemp(prefix="spark_graft_index_")
+        idx = scratch_dir(spark, "spark_graft_index_")
         build_search_index(
             _t(spark, sf_dir, "documents"),
             _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0),
@@ -4493,8 +4475,9 @@ def _ensure_index(spark: SparkSession, sf_dir: str) -> str:
             pq_sub_d=_PQ_SUBD,
             positions=True,
         )
-        _INDEX_CACHE[sf_dir] = idx
-    return _INDEX_CACHE[sf_dir]
+        return idx
+
+    return memo(spark, ("index", sf_dir), build)
 
 
 @_register("indexed_bm25_search", _BM25_SQL.format(k=KNN_K))
@@ -8103,20 +8086,16 @@ ORDER BY r.rank
 """
 
 
-_TWO_TIER_CACHE: dict[str, str] = {}
-
-
 def _ensure_two_tier(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the two-tier chunk tables once per (process,
+    """Materialize the two-tier chunk tables once per (session,
     sf_dir) — chunking is an INGESTION step (the reference stores
     chunks in its DB, two_tier_chunker.py); queries read the stored
     tier tables, they never re-chunk the corpus. Same amortization
     as _ensure_index."""
-    import tempfile
 
-    if sf_dir not in _TWO_TIER_CACHE:
+    def build() -> str:
         docs = _t(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="spark_graft_two_tier_")
+        path = scratch_dir(spark, "spark_graft_two_tier_")
         chunking.two_tier_pages(
             docs, page_size=_S2B_PAGE, page_overlap=_S2B_OVERLAP
         ).write.mode("overwrite").parquet(f"{path}/pages")
@@ -8138,8 +8117,9 @@ def _ensure_two_tier(spark: SparkSession, sf_dir: str) -> str:
             id_col="chunk_id",
             text_col="chunk_text",
         )
-        _TWO_TIER_CACHE[sf_dir] = path
-    return _TWO_TIER_CACHE[sf_dir]
+        return path
+
+    return memo(spark, ("two_tier", sf_dir), build)
 
 
 @_register("rag_small_to_big", _s2b_sql())
@@ -9208,13 +9188,11 @@ def _q_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a fresh state dir: run 1 processes every document, run 2 with
     the same listing skips every one (row_indexer.rs:110-131
     semantics). Counters returned as a 1-row DataFrame."""
-    import tempfile
-
     from cocoindex_data_ingestion_spark.plans.incremental import (
         BucketedParquetState, IncrementalRunner,
     )
 
-    state_dir = tempfile.mkdtemp(prefix="incr_query_")
+    state_dir = scratch_dir(spark, "incr_query_")
     runner = IncrementalRunner(
         spark, state_dir, "entry-demo-v1", key_col="doc_id", ordinal_col="ordinal"
     )
@@ -12056,21 +12034,16 @@ def _q_reach_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
         """)
 
 
-_EDGE_CACHE: dict[str, str] = {}
-
-
 def _ensure_cosupply_edges(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the capped co-supply edge table once per sf_dir —
-    the graph analogue of _ensure_index (a production deployment
-    keeps the edge list as a table maintained incrementally; every
-    traversal then starts from it instead of re-deriving edges from
-    the fact table)."""
-    import tempfile
+    """Materialize the capped co-supply edge table once per (session,
+    sf_dir) — the graph analogue of _ensure_index (a production
+    deployment keeps the edge list as a table maintained
+    incrementally; every traversal then starts from it instead of
+    re-deriving edges from the fact table)."""
 
-    if sf_dir not in _EDGE_CACHE:
+    def build() -> str:
         ext = os.environ.get("SPARK_GRAFT_EDGES_DIR")  # cold-bench hook
         if ext and os.path.isdir(ext):
-            _EDGE_CACHE[sf_dir] = ext
             return ext
         li = _t(spark, sf_dir, "lineitem")
         per_order = li.groupBy("l_orderkey").agg(
@@ -12091,10 +12064,11 @@ def _ensure_cosupply_edges(spark: SparkSession, sf_dir: str) -> str:
             )
             .select("src", F.explode("dsts").alias("dst"))
         )
-        path = tempfile.mkdtemp(prefix="spark_graft_edges_")
+        path = scratch_dir(spark, "spark_graft_edges_")
         edges.write.mode("overwrite").parquet(path)
-        _EDGE_CACHE[sf_dir] = path
-    return _EDGE_CACHE[sf_dir]
+        return path
+
+    return memo(spark, ("edges", sf_dir), build)
 
 
 @_register("indexed_graph_reachability", _REACH_CTE_SQL)
@@ -12392,8 +12366,6 @@ def _q_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     the affected groups (plans/ivm.py). The oracle is the one-shot
     SQL aggregate over the same final row set, so the equality is the
     IVM correctness contract itself."""
-    import tempfile
-
     from cocoindex_data_ingestion_spark.plans.ivm import MaterializedAgg
 
     ev = _t(spark, sf_dir, "events").select(
@@ -12403,7 +12375,7 @@ def _q_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     view = MaterializedAgg(
         spark,
-        tempfile.mkdtemp(prefix="ivm_query_"),
+        scratch_dir(spark, "ivm_query_"),
         group_col="event_type",
         sum_cols=("v_fp",),
     )
@@ -12439,14 +12411,12 @@ def _q_ivm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the delete batch recomputes just its groups from the base. Oracle
     = one-shot window top-k over the final row set — the maintenance
     correctness contract."""
-    import tempfile
-
     from cocoindex_data_ingestion_spark.plans.ivm import MaterializedTopK
 
     ev = _t(spark, sf_dir, "events").select("event_type", "event_id", "value")
     view = MaterializedTopK(
         spark,
-        tempfile.mkdtemp(prefix="ivm_topk_"),
+        scratch_dir(spark, "ivm_topk_"),
         group_col="event_type",
         id_col="event_id",
         score_col="value",
@@ -12480,14 +12450,12 @@ def _q_ivm_bm25_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a doc_id%17 delete — queried WITHOUT any rebuild. Oracle =
     ad-hoc BM25 over the live docs: the maintenance correctness
     contract (df from live postings, n_docs/avgdl from the ledger)."""
-    import tempfile
-
     from cocoindex_data_ingestion_spark.operators.indexing import (
         SegmentedPostingsIndex,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    idx = SegmentedPostingsIndex(spark, tempfile.mkdtemp(prefix="segidx_"))
+    idx = SegmentedPostingsIndex(spark, scratch_dir(spark, "segidx_"))
     idx.add_segment(docs.filter(F.col("doc_id") % 3 != 0))
     idx.add_segment(docs.filter(F.col("doc_id") % 3 == 0))
     idx.delete_docs(docs.filter(F.col("doc_id") % 17 == 0).select("doc_id"))
@@ -12537,8 +12505,6 @@ def _q_ivm_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     their cells by pure-function assignment, so refreshes touch only
     affected cells and the oracle is the plain IVF SQL over the
     final live row set."""
-    import tempfile
-
     from cocoindex_data_ingestion_spark.operators.indexing import (
         IncrementalVectorIndex,
     )
@@ -12549,7 +12515,7 @@ def _q_ivm_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cent_id", F.col("cvec").cast("array<double>").alias("cvec")
     )
     idx = IncrementalVectorIndex(
-        spark, tempfile.mkdtemp(prefix="ivm_vec_"), cents, assign="expr"
+        spark, scratch_dir(spark, "ivm_vec_"), cents, assign="expr"
     )
     idx.refresh(inserts=corpus.filter(F.col("vec_id") % 3 != 0))
     idx.refresh(inserts=corpus.filter(F.col("vec_id") % 3 == 0))
@@ -12573,8 +12539,6 @@ def _q_ivm_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescanning the table; a user stays distinct while any of their
     events' multiplicity survives. Oracle = one-shot SQL
     count(DISTINCT) over the same final row set."""
-    import tempfile
-
     from cocoindex_data_ingestion_spark.plans.ivm import MaterializedDistinct
 
     ev = _t(spark, sf_dir, "events").select(
@@ -12582,7 +12546,7 @@ def _q_ivm_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     view = MaterializedDistinct(
         spark,
-        tempfile.mkdtemp(prefix="ivm_distinct_"),
+        scratch_dir(spark, "ivm_distinct_"),
         group_col="event_type",
         value_col="user_id",
     )
@@ -12758,8 +12722,6 @@ def _q_ivm_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     support multiset. Refresh cost O(|delta| + touched buckets);
     the quantile read scans only the cell table. Oracle = the
     one-shot sketch recipe over the final surviving rows."""
-    import tempfile
-
     from cocoindex_data_ingestion_spark.plans.ivm import (
         MaterializedQuantile,
     )
@@ -12769,7 +12731,7 @@ def _q_ivm_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     view = MaterializedQuantile(
         spark,
-        tempfile.mkdtemp(prefix="ivm_qsk_"),
+        scratch_dir(spark, "ivm_qsk_"),
         group_col="event_type",
         value_col="v",
         # the cell state is STRUCTURALLY bounded (groups × occupied
@@ -12886,8 +12848,6 @@ def _q_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     term). Refresh cost O(|delta| + matching other-side rows +
     touched buckets); the read scans only the view table. Oracle =
     the from-scratch join over the final surviving rows."""
-    import tempfile
-
     from cocoindex_data_ingestion_spark.plans.ivm import MaterializedJoin
 
     o = (
@@ -12906,7 +12866,7 @@ def _q_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     view = MaterializedJoin(
         spark,
-        tempfile.mkdtemp(prefix="ivm_join_"),
+        scratch_dir(spark, "ivm_join_"),
         key_col="custkey",
         a_schema="o_orderkey bigint, total_cents bigint",
         b_schema="c_mktsegment string",
@@ -14087,13 +14047,11 @@ def _q_ivm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (evaluation.IncrementalDriftMonitor). The oracle is the SAME
     two-cohort PSI SQL — equality IS the incremental-maintenance
     contract."""
-    import tempfile
-
     from cocoindex_data_ingestion_spark.operators import evaluation
 
     emb = _t(spark, sf_dir, "embeddings")
     mon = evaluation.IncrementalDriftMonitor(
-        spark, tempfile.mkdtemp(prefix="drift_query_"),
+        spark, scratch_dir(spark, "drift_query_"),
         n_buckets=_PSI_BUCKETS,
     )
     even = emb.filter(F.col("vec_id") % 2 == 0)
@@ -15891,25 +15849,19 @@ ORDER BY size DESC, community ASC LIMIT 25"""
     )
 
 
-_LPA_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _ensure_lpa(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Shared LPA leg: (edges, 3-round label assignment), computed
-    once per (process, sf_dir) and eagerly checkpointed — the CF
+    once per (session, sf_dir) and eagerly checkpointed — the CF
     shared-leg pattern. graph_label_propagation and graph_modularity
     both consume THE SAME community assignment, so the iterative
     rounds run once instead of once per registered query (the r4
     judge's wall-time finding: modularity recomputed LPA's rounds).
     Cold build cost sits with the first caller, like the search-index
     build (_ensure_index); SCALING.md reports it separately.
+    localCheckpoint'd frames are bound to the SparkContext that made
+    them, which the session memo's applicationId scope respects."""
 
-    Keyed by (applicationId, sf_dir): localCheckpoint'd frames are
-    bound to the SparkContext that made them, so a stop/recreate of
-    the session in the same process must not serve stale frames
-    (r5 advisor finding)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LPA_CACHE:
+    def build() -> tuple[DataFrame, DataFrame]:
         li = _t(spark, sf_dir, "lineitem")
         edges = (
             li.select(
@@ -15922,8 +15874,9 @@ def _ensure_lpa(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
         lab = graph_ops.label_propagation_fixed(edges, n_iter=3).localCheckpoint(
             eager=True
         )
-        _LPA_CACHE[key] = (edges, lab)
-    return _LPA_CACHE[key]
+        return edges, lab
+
+    return memo(spark, ("lpa", sf_dir), build)
 
 
 @_register("graph_label_propagation", _lpa_sql(3))
@@ -16475,27 +16428,23 @@ def _cf_weights(spark: SparkSession, sf_dir: str):
     )
 
 
-_CF_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _ensure_cf(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Shared CF leg: (interaction weights, item-item similarities),
-    computed once per (SparkContext, sf_dir) and eagerly
-    checkpointed — the _ensure_lpa pattern. recs_item_similarity and
-    recs_user_topk both consume THE SAME pair-generation pass (the
-    genuinely expensive stage), so it runs once instead of once per
-    registered query. Keyed by applicationId so a recreated session
-    never serves checkpoints bound to a dead context."""
+    computed once per (session, sf_dir) and eagerly checkpointed —
+    the _ensure_lpa pattern. recs_item_similarity and recs_user_topk
+    both consume THE SAME pair-generation pass (the genuinely
+    expensive stage), so it runs once instead of once per registered
+    query."""
     from cocoindex_data_ingestion_spark.operators import recommend
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CF_CACHE:
+    def build() -> tuple[DataFrame, DataFrame]:
         w = _cf_weights(spark, sf_dir).localCheckpoint(eager=True)
         sims = recommend.item_item_cosine(
             w, min_co_users=_CF_MIN_CO
         ).localCheckpoint(eager=True)
-        _CF_CACHE[key] = (w, sims)
-    return _CF_CACHE[key]
+        return w, sims
+
+    return memo(spark, ("cf", sf_dir), build)
 
 
 @_register("recs_item_similarity", _CF_SIMS_SQL)
@@ -17986,8 +17935,6 @@ def _q_ivm_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch smoothing over ALL days (the recursive-CTE oracle shared
     with events_ewma). Delta-maintenance for sequential state that
     plain delta-AGGREGATION cannot express."""
-    import tempfile
-
     from cocoindex_data_ingestion_spark.plans.ivm import MaterializedEWMA
 
     ev = _t(spark, sf_dir, "events")
@@ -18008,7 +17955,7 @@ def _q_ivm_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("m")
     )
     staged = daily.crossJoin(F.broadcast(mid))
-    view = MaterializedEWMA(spark, tempfile.mkdtemp(prefix="ivm_ewma_"))
+    view = MaterializedEWMA(spark, scratch_dir(spark, "ivm_ewma_"))
     view.refresh(
         staged.filter(F.col("day") <= F.col("m")).select("g", "day", "n")
     )
@@ -18026,21 +17973,18 @@ def _q_ivm_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- co-located bucketed join (operators/bucketed.py) ----------------------------
 
-_BUCKETED_CACHE: dict[str, bool] = {}
-
-
 def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize orders+lineitem bucketed by orderkey ONCE per
     (session, sf) — the amortized layout build, same discipline as
-    the search-index cache."""
-    import tempfile
-
+    the search index (_ensure_index). The catalog tables live in the
+    session that built them, so a new session rebuilds them."""
     from cocoindex_data_ingestion_spark.operators import bucketed
 
     tag = "".join(c if c.isalnum() else "_" for c in sf_dir)
     lt, rt = f"b_orders_{tag}", f"b_lineitem_{tag}"
-    if sf_dir not in _BUCKETED_CACHE:
-        base = tempfile.mkdtemp(prefix="spark_graft_buckets_")
+
+    def build() -> tuple[str, str]:
+        base = scratch_dir(spark, "spark_graft_buckets_")
         bucketed.materialize_bucketed(
             _t(spark, sf_dir, "orders").select(
                 "o_orderkey", "o_orderpriority"
@@ -18062,8 +18006,9 @@ def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             16,
             f"{base}/lineitem",
         )
-        _BUCKETED_CACHE[sf_dir] = True
-    return lt, rt
+        return lt, rt
+
+    return memo(spark, ("bucketed", sf_dir), build)
 
 
 _BUCKETED_JOIN_SQL = f"""

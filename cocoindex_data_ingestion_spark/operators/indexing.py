@@ -40,6 +40,7 @@ from cocoindex_data_ingestion_spark.functions.compare import (
 )
 from cocoindex_data_ingestion_spark.functions.similarity import dot
 from cocoindex_data_ingestion_spark.functions.text import bm25_tokens
+from cocoindex_data_ingestion_spark.memo import forget, memo
 from cocoindex_data_ingestion_spark.operators.bm25 import B, K1
 from cocoindex_data_ingestion_spark.operators.vector_search import lsh_signature
 
@@ -59,51 +60,38 @@ def _token_buckets_py(terms: list[str], n_buckets: int = POSTINGS_BUCKETS) -> li
     return sorted({zlib.crc32(t.encode("utf-8")) % n_buckets for t in terms})
 
 
-# Resolved-layout reader cache: spark.read.parquet pays file listing +
-# schema inference as driver-side jobs at DEFINITION time (~0.2 s per
-# layout on local[32]) — for a warm index that fixed tax dominated
-# indexed-query latency (3-4 layout reads per hybrid query). One
-# resolved relation per (SparkContext, path) serves every query, the
-# same way a search service keeps its index readers open. Build
-# functions invalidate their index_dir prefix after writing, so a
+# Resolved-layout readers and index descriptors live in the session
+# memo: spark.read.parquet pays file listing + schema inference as
+# driver-side jobs at DEFINITION time (~0.2 s per layout on
+# local[32]), which dominated warm indexed-query latency (3-4 layout
+# reads per hybrid query). Keys are ("layout", path, ...) so build
+# functions forget their index_dir prefix after writing, and a
 # rebuilt layout is never served from a stale file listing.
-_READER_CACHE: dict = {}
-
-
 def read_layout(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _READER_CACHE:
-        _READER_CACHE[key] = spark.read.parquet(path)
-    return _READER_CACHE[key]
+    return memo(spark, ("layout", path), lambda: spark.read.parquet(path))
 
 
 def invalidate_layout(path_prefix: str) -> None:
-    for cache in (_READER_CACHE, _SCALAR_CACHE):
-        for k in [k for k in cache if k[1].startswith(path_prefix)]:
-            del cache[k]
-
-
-# Driver-resolved index scalars (corpus stats, centroid lists): one
-# row / K rows read once per (SparkContext, layout) — the in-memory
-# index descriptor. Invalidated with the reader cache on rebuild.
-_SCALAR_CACHE: dict = {}
+    forget(lambda k: k[0] == "layout" and k[1].startswith(path_prefix))
 
 
 def _stats_scalars(spark: SparkSession, index_dir: str) -> tuple[int, float]:
-    key = (spark.sparkContext.applicationId, f"{index_dir}/stats")
-    if key not in _SCALAR_CACHE:
-        row = read_layout(spark, f"{index_dir}/stats").first()
-        _SCALAR_CACHE[key] = (int(row["n_docs"]), float(row["avgdl"]))
-    return _SCALAR_CACHE[key]
+    """Corpus stats (one row), read once per session and layout."""
+    path = f"{index_dir}/stats"
+
+    def build() -> tuple[int, float]:
+        row = read_layout(spark, path).first()
+        return int(row["n_docs"]), float(row["avgdl"])
+
+    return memo(spark, ("layout", path, "scalars"), build)
 
 
 def _centroid_rows(spark: SparkSession, index_dir: str) -> list:
-    key = (spark.sparkContext.applicationId, f"{index_dir}/centroids")
-    if key not in _SCALAR_CACHE:
-        _SCALAR_CACHE[key] = read_layout(
-            spark, f"{index_dir}/centroids"
-        ).collect()
-    return _SCALAR_CACHE[key]
+    path = f"{index_dir}/centroids"
+    return memo(
+        spark, ("layout", path, "rows"),
+        lambda: read_layout(spark, path).collect(),
+    )
 
 
 def _resolve_qvec(query_vec) -> list:

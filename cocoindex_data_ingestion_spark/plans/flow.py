@@ -36,6 +36,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cocoindex_data_ingestion_spark.memo import forget, memo
+
 
 class FlowError(ValueError):
     pass
@@ -237,7 +239,6 @@ class Flow:
 # access (the reference builds lazily too: flows analyze on use).
 
 _FLOW_BUILDERS: dict[str, "callable"] = {}
-_FLOW_CACHE: dict[str, Flow] = {}
 
 
 def flow_def(name: str | None = None):
@@ -267,11 +268,13 @@ def flow_names() -> list[str]:
 def flow_by_name(name: str, spark) -> Flow:
     if name not in _FLOW_BUILDERS:
         raise FlowError(f"unknown flow '{name}'")
-    if name not in _FLOW_CACHE:
+
+    def build() -> Flow:
         fl = Flow(name)
         _FLOW_BUILDERS[name](fl, spark)
-        _FLOW_CACHE[name] = fl
-    return _FLOW_CACHE[name]
+        return fl
+
+    return memo(spark, ("flow", name), build)
 
 
 def all_flows(spark) -> dict[str, Flow]:
@@ -281,7 +284,7 @@ def all_flows(spark) -> dict[str, Flow]:
 def clear_registry() -> None:
     """Test/app-reload hook: forget every registered flow."""
     _FLOW_BUILDERS.clear()
-    _FLOW_CACHE.clear()
+    forget(lambda k: k[0] == "flow")
 
 
 # -- app namespace + default target naming (python/cocoindex/setting.py:14-34,
@@ -338,4 +341,4 @@ def invalidate_flow(name: str) -> None:
     re-runs its builder — fresh source DataFrames, fresh file
     listings (Spark pins a file source's listing at DataFrame
     creation; a live updater must re-list per tick)."""
-    _FLOW_CACHE.pop(name, None)
+    forget(lambda k: k == ("flow", name))

@@ -173,15 +173,10 @@ class BucketedParquetState:
         import json
 
         seqs = self._manifest_seqs()
-        if seqs:
-            with open(self._numbered_path(seqs[-1])) as f:
-                return json.load(f)
-        # legacy single-pointer layout (pre-OCC states)
-        try:
-            with open(os.path.join(self.path, "MANIFEST.json")) as f:
-                return json.load(f)
-        except FileNotFoundError:
+        if not seqs:
             return {"seq": -1, "buckets": {}}
+        with open(self._numbered_path(seqs[-1])) as f:
+            return json.load(f)
 
     def _try_commit(self, manifest: dict) -> bool:
         """Claim ``MANIFEST.{seq}.json`` atomically; False = lost the
@@ -214,6 +209,15 @@ class BucketedParquetState:
     def _bucket_of(self, col) -> F.Column:
         return F.pmod(
             F.crc32(col.cast("string").cast("binary")), F.lit(self.n_buckets)
+        )
+
+    def _touched_buckets(self, df: DataFrame) -> list[int]:
+        """Sorted bucket ids of ``df``'s keys (one distinct+collect job)."""
+        return sorted(
+            r["b"]
+            for r in df.select(
+                self._bucket_of(F.col(self.key_col)).alias("b")
+            ).distinct().collect()
         )
 
     def _manifest_at(self, seq: int) -> dict:
@@ -271,12 +275,7 @@ class BucketedParquetState:
             # just to learn there is nothing to read)
             return self.spark.createDataFrame([], self.schema_ddl)
         if buckets is None:
-            buckets = [
-                r["b"]
-                for r in keys.select(
-                    self._bucket_of(F.col(self.key_col)).alias("b")
-                ).distinct().collect()
-            ]
+            buckets = self._touched_buckets(keys)
         return self.read(buckets).join(
             keys.select(self.key_col).distinct(), self.key_col, "left_semi"
         )
@@ -302,12 +301,7 @@ class BucketedParquetState:
         changed_keys = upserts.select(key)
         if delete_keys is not None:
             changed_keys = changed_keys.unionByName(delete_keys.select(key))
-        touched = sorted(
-            r["b"]
-            for r in changed_keys.select(
-                self._bucket_of(F.col(key)).alias("b")
-            ).distinct().collect()
-        )
+        touched = self._touched_buckets(changed_keys)
         if not touched:
             return []
 
@@ -373,15 +367,9 @@ class BucketedParquetState:
         already knows them — must be exactly the bucket set of
         ``delta``'s keys, or buckets outside it keep stale rows)."""
         key = self.key_col
-        if touched is None:
-            touched = sorted(
-                r["b"]
-                for r in delta.select(
-                    self._bucket_of(F.col(key)).alias("b")
-                ).distinct().collect()
-            )
-        else:
-            touched = sorted(touched)
+        touched = sorted(
+            self._touched_buckets(delta) if touched is None else touched
+        )
         if not touched:
             return []
 
@@ -433,16 +421,9 @@ class BucketedParquetState:
         too (IEEE addition is commutative), so results are identical
         to the coalesce-and-add fold. ``on`` + ``sum_cols`` must
         cover every state column; ``touched`` as in fold_merge."""
-        key = self.key_col
-        if touched is None:
-            touched = sorted(
-                r["b"]
-                for r in delta.select(
-                    self._bucket_of(F.col(key)).alias("b")
-                ).distinct().collect()
-            )
-        else:
-            touched = sorted(touched)
+        touched = sorted(
+            self._touched_buckets(delta) if touched is None else touched
+        )
         if not touched:
             return []
         empty = self.spark.createDataFrame([], self.schema_ddl)

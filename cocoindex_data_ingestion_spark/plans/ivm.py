@@ -761,13 +761,7 @@ class MaterializedJoin:
         # bucket count, so this one list serves the delta's own
         # fold_merge AND the other side's pruned read — previously
         # each of those ran its own distinct+collect job
-        buckets = sorted(
-            r["b"]
-            for r in delta.select(
-                self.a_state._bucket_of(F.col(k)).alias("b")
-            ).distinct().collect()
-        )
-        return delta, buckets
+        return delta, self.a_state._touched_buckets(delta)
 
     def _apply_side(
         self,

@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cocoindex_data_ingestion_spark.memo import memo
+
 TABLES = (
     "region",
     "nation",
@@ -42,15 +44,6 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-# Resolved-DataFrame cache: spark.read.parquet pays file listing +
-# schema inference (footer reads) as driver jobs at DEFINITION time —
-# ~0.2 s per call on local[32]. The testdata tables are immutable, so
-# one resolved relation per (SparkContext, path) serves every query;
-# keyed by applicationId so a recreated session never reuses plans
-# bound to a dead context.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Load one table; Catalyst handles column pruning + filter pushdown.
 
@@ -74,18 +67,24 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
 
     ensure_session_confs(spark)
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        dtype = dict(df.dtypes).get("ts")
-        if dtype == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif dtype == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _TABLE_CACHE[key] = df
-    return df
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        if name == "events":
+            dtype = dict(df.dtypes).get("ts")
+            if dtype == "bigint":
+                df = df.withColumn(
+                    "ts", F.timestamp_micros(F.expr("ts div 1000"))
+                )
+            elif dtype == "timestamp_ntz":
+                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return df
+
+    # spark.read.parquet pays file listing + schema inference as driver
+    # jobs at DEFINITION time (~0.2 s per call on local[32]); the
+    # tables are immutable, so one resolved relation per session
+    # serves every query
+    return memo(spark, ("table", sf_dir, name), build)
 
 
 def load_tables(

@@ -96,6 +96,9 @@ _UPSERT_STATE_SCHEMA = "max_ordinal long"
 _UPSERT_OUT_SCHEMA = (
     "user_id long, event_id long, ordinal long, event_type string, value double"
 )
+# the stream projects exactly these columns, in schema order, before
+# the stateful operator — _upsert_fn's positional slice relies on it
+_UPSERT_OUT_COLS = [f.split()[0] for f in _UPSERT_OUT_SCHEMA.split(",")]
 
 
 def _upsert_fn(
@@ -153,7 +156,7 @@ def ordinal_upsert_stream(events: DataFrame) -> DataFrame:
     ``props`` JSON blob — the widest column of the stream — is never
     used, so shipping it per row was pure Arrow/transpose cost."""
     with_ord = events.withColumn("ordinal", ts_us("ts")).select(
-        "user_id", "event_id", "ordinal", "event_type", "value"
+        *_UPSERT_OUT_COLS
     )
     return with_ord.groupBy("user_id").applyInPandasWithState(
         _upsert_fn,
@@ -295,49 +298,6 @@ def foreach_batch_ivm(view, applied_path: str | None = None):
         os.replace(tmp, path)
 
     return _sink
-
-
-def ordinal_upsert_stream_tws(events: DataFrame) -> DataFrame:
-    """Ordinal-monotonic upsert on Spark 4's ``transformWithState``
-    operator — the successor to ``applyInPandasWithState`` above
-    (same semantics, same state: key → max ordinal), kept as a twin
-    because transformWithState is where new state features land
-    (TTL, multiple state variables, timers, state data source reads).
-    Requires the RocksDB state store provider AND google.protobuf
-    (the Python state-server protocol) — absent in this container,
-    so the equivalence test importorskips; applyInPandasWithState
-    remains the default implementation.
-
-    Equivalence with :func:`ordinal_upsert_stream` is pinned in
-    tests/test_streaming.py."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class _OrdinalUpsert(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._max = handle.getValueState("max_ord", "max_ordinal long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            cur = self._max.get()[0] if self._max.exists() else -1
-            batch = pd.concat(list(rows), ignore_index=True)
-            batch = batch.sort_values(["ordinal", "event_id"])
-            fresh = batch[batch["ordinal"] > cur]
-            if len(fresh):
-                self._max.update((int(fresh["ordinal"].max()),))
-                yield fresh.iloc[[-1]][
-                    ["user_id", "event_id", "ordinal", "event_type", "value"]
-                ]
-
-        def close(self) -> None:
-            pass
-
-    with_ord = events.withColumn("ordinal", ts_us("ts"))
-    return with_ord.groupBy("user_id").transformWithStateInPandas(
-        _OrdinalUpsert(),
-        outputStructType=_UPSERT_OUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
 
 
 def foreach_batch_expectations(

@@ -89,14 +89,17 @@ def test_ann_recall_cli_parses_fixture_flag():
 # -- LPA cache is scoped to the SparkContext ---------------------------------
 
 
-def test_lpa_cache_keyed_by_application_id(spark):
+def test_lpa_cache_keyed_by_application_id(spark, sf_dir):
+    """The shared LPA leg lives in the session memo under ("lpa",
+    sf_dir): later callers in the same application get the same
+    checkpointed frames. A new application rebuilding it is covered
+    by tests/test_memo.py."""
     import __spark_entry__ as entrymod
+    from cocoindex_data_ingestion_spark.memo import memo
 
-    entrymod._LPA_CACHE.clear()
-    sf_dir = "/root/testdata/sf0.001"
-    entrymod._ensure_lpa(spark, sf_dir)
-    (key,) = entrymod._LPA_CACHE.keys()
-    assert key == (spark.sparkContext.applicationId, sf_dir)
+    legs = entrymod._ensure_lpa(spark, sf_dir)
+    assert entrymod._ensure_lpa(spark, sf_dir) is legs
+    assert memo(spark, ("lpa", sf_dir), lambda: None) is legs
 
 
 # -- small-to-big (parent-context) retrieval ---------------------------------
@@ -382,7 +385,9 @@ def test_read_layout_invalidated_by_rebuild(spark, tmp_path):
 
     p = str(tmp_path / "lay")
     spark.createDataFrame([(1,)], "a long").write.parquet(p)
-    assert indexing.read_layout(spark, p).count() == 1
+    first = indexing.read_layout(spark, p)
+    assert first.count() == 1
+    assert indexing.read_layout(spark, p) is first  # memo hit
     # overwrite with more rows, then invalidate (as build_* do)
     spark.createDataFrame([(1,), (2,)], "a long").write.mode(
         "overwrite"

@@ -270,65 +270,6 @@ def test_foreach_batch_ivm_fences_redelivery(spark, tmp_path):
     assert got == {("a", 2, 4.0), ("b", 1, 2.0)}
 
 
-def test_ordinal_upsert_tws_matches_apply_in_pandas(spark, tmp_path):
-    """The transformWithState twin must produce the same surviving
-    rows as the applyInPandasWithState implementation on the same
-    out-of-order input. transformWithState's state-server protocol
-    needs google.protobuf, which this container lacks — skipped
-    (not xfailed) there; the twin is exercised wherever protobuf
-    exists."""
-    pytest.importorskip("google.protobuf")
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    df1 = spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00", 7, "view", 1.0, "{}"),
-         (2, "2024-01-01 11:00:00", 7, "click", 2.0, "{}"),
-         (4, "2024-01-01 08:00:00", 9, "open", 4.0, "{}")],
-        "event_id long, ts_s string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s")
-    df1.select("event_id", "ts", "user_id", "event_type", "value", "props") \
-        .coalesce(1).write.mode("append").parquet(str(in_dir))
-    df2 = spark.createDataFrame(
-        [(3, "2024-01-01 09:00:00", 7, "stale", 9.0, "{}")],
-        "event_id long, ts_s string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s")
-    df2.select("event_id", "ts", "user_id", "event_type", "value", "props") \
-        .coalesce(1).write.mode("append").parquet(str(in_dir))
-
-    results = {}
-    for name, fn in (
-        ("aip", se.ordinal_upsert_stream),
-        ("tws", se.ordinal_upsert_stream_tws),
-    ):
-        stream = se.read_events_stream(spark, str(in_dir), max_files_per_trigger=1)
-        if name == "tws":
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-        try:
-            q = (
-                fn(stream).writeStream.outputMode("append")
-                .format("memory")
-                .queryName(f"ups_{name}")
-                .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-                .start()
-            )
-            _run_to_completion(q)
-        finally:
-            if name == "tws":
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass"
-                )
-        results[name] = sorted(
-            (r.user_id, r.event_id, r.ordinal, r.event_type)
-            for r in spark.sql(f"SELECT * FROM ups_{name}").collect()
-        )
-    assert results["tws"] == results["aip"]
-    assert [t[3] for t in results["tws"]] == ["click", "open"]
-
-
 def test_watermark_drops_late_data(spark, tmp_path):
     """Late-data policy: an event older than (max event time −
     watermark) arriving in a LATER micro-batch must be excluded from

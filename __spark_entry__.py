@@ -4542,21 +4542,11 @@ def _q_indexed_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_indexed_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-path flagship: both legs served from the prebuilt
     index (pruned postings + norm-precomputed vectors) → RRF."""
-    from cocoindex_data_ingestion_spark.operators.indexing import (
-        indexed_bm25, indexed_knn,
+    return hybrid.hybrid_search(
+        _t(spark, sf_dir, "documents"), None, None, QUERY_TERMS, k=KNN_K,
+        leg_k=LEG_K, index_dir=_ensure_index(spark, sf_dir),
+        query_vec_df=_qvec_vals(spark, sf_dir),
     )
-
-    idx = _ensure_index(spark, sf_dir)
-    q = _qvec_vals(spark, sf_dir)
-    vec_leg = indexed_knn(spark, idx, q, k=LEG_K, exact=True).select(
-        F.lit("vector").alias("source"),
-        F.col("vec_id").alias("id"),
-        F.col("score"),
-    )
-    bm_leg = indexed_bm25(spark, idx, QUERY_TERMS, k=LEG_K).select(
-        F.lit("bm25").alias("source"), F.col("doc_id").alias("id"), F.col("score")
-    )
-    return fusion.rrf_fuse_legs([vec_leg, bm_leg], limit=KNN_K)
 
 
 # -- §2.8 grouping sets -------------------------------------------------------

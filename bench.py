@@ -588,6 +588,16 @@ def bench_streaming(spark, sf_dir: str) -> dict:
     return results
 
 
+PROBE_FLOOR_S = 1e-3
+
+
+def probe_ratio(probes: list[float], floor: float = PROBE_FLOOR_S) -> float:
+    """Spread of the preflight probes, max / min, on unrounded times.
+    The denominator is clamped at ``floor``, so a sub-millisecond probe
+    on a fast host reads as a small spread, not as a zero division."""
+    return max(probes) / max(min(probes), floor)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -614,17 +624,16 @@ def main() -> None:
         while True:
             probes = []
             for _ in range(5):
-                t0 = time.time()
+                t0 = time.perf_counter()
                 qs["q1_pricing_summary"](spark, sf_dir).collect()
-                probes.append(round(time.time() - t0, 3))
-            ratio = (max(probes) / min(probes)) if min(probes) > 0 else None
-            if ratio is not None and ratio <= 2.5:
-                return {"probe_sec": probes, "ratio": round(ratio, 3),
-                        "retries": retries}
+                probes.append(time.perf_counter() - t0)
+            ratio = probe_ratio(probes)
+            shown = {"probe_sec": [round(p, 3) for p in probes],
+                     "ratio": round(ratio, 3), "retries": retries}
+            if ratio <= 2.5:
+                return shown
             if retries >= 2:
-                return {"probe_sec": probes,
-                        "ratio": round(ratio, 3) if ratio else None,
-                        "retries": retries, "degraded_at_start": True}
+                return {**shown, "degraded_at_start": True}
             retries += 1
             time.sleep(30)
 

@@ -30,6 +30,20 @@ def stable_round_sql(expr: str, n: int = 4) -> str:
     return f"floor(({expr}) * {p} + 0.5) / {p}"
 
 
+# Spark SQL twins of the Column forms, for statements built as text:
+# the same operand order, and every double literal ``D``-suffixed
+# (Spark SQL reads an unsuffixed ``0.5`` as DECIMAL, so the DuckDB
+# ``*_sql`` text above would change the plan's types).
+def spark_double(x: float) -> str:
+    """Spark SQL double literal; ``repr`` round-trips doubles exactly."""
+    return f"{float(x)!r}D"
+
+
+def stable_round_spark_sql(expr: str, n: int = 4) -> str:
+    p = spark_double(10**n)
+    return f"floor(({expr}) * {p} + 0.5D) / {p}"
+
+
 # --- order-independent aggregation of fractional doubles ---------------------
 #
 # ``sum(double)`` accumulates in partition-dependent order, and IEEE addition
@@ -60,6 +74,11 @@ def stable_sum(col: Column, n: int = 2) -> Column:
 def stable_sum_sql(expr: str, n: int = 2) -> str:
     p = float(10**n)
     return f"(sum(cast(floor(({expr}) * {p} + 0.5) as bigint)) / {p})"
+
+
+def stable_sum_spark_sql(expr: str, n: int = 2) -> str:
+    p = spark_double(10**n)
+    return f"sum(CAST(floor(({expr}) * {p} + 0.5D) AS BIGINT)) / {p}"
 
 
 def stable_avg(col: Column, n: int = 4, elem_scale: int = 6) -> Column:

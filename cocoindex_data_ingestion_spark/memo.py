@@ -29,6 +29,7 @@ from typing import TypeVar
 T = TypeVar("T")
 
 _app: str | None = None
+_sc = None  # the SparkContext whose applicationId is ``_app``
 _values: dict[tuple, object] = {}
 _root: str | None = None
 # re-entrant: a build may itself memoize (an index build reads layouts)
@@ -46,12 +47,18 @@ atexit.register(_drop_root)
 
 
 def _enter(spark) -> None:
-    global _app
-    app = spark.sparkContext.applicationId
+    global _app, _sc
+    sc = spark.sparkContext
+    if sc is _sc:
+        return
+    # read once per context: ``applicationId`` is two gateway round
+    # trips, and a memo hit is on every request's build path
+    app = sc.applicationId
     if app != _app:
         _values.clear()
         _drop_root()
         _app = app
+    _sc = sc
 
 
 def memo(spark, key: tuple, build: Callable[[], T]) -> T:

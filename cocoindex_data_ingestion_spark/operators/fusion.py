@@ -21,7 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cocoindex_data_ingestion_spark.functions.compare import stable_round
+from cocoindex_data_ingestion_spark.functions.compare import (
+    stable_round,
+    stable_round_spark_sql,
+)
 
 RRF_K = 60  # app/services/search_service.py:375
 
@@ -119,6 +122,31 @@ def rrf_fuse_legs(
     return fused.orderBy(
         F.col("rrf_score").desc(), F.col(id_col).asc()
     ).limit(limit)
+
+
+def rrf_fuse_legs_sql(
+    legs: list[tuple[str, str, str]],
+    limit: int = 10,
+    rrf_k: int = RRF_K,
+    round_to: int = 4,
+) -> str:
+    """SQL text of :func:`rrf_fuse_legs` over ``(source, id column,
+    leg statement)`` triples, each leg statement a top-k query with
+    columns (id column, score): rank per leg, ``UNION ALL``, then
+    ``/*+ COALESCE(1) */`` before the fusion groupBy — the same
+    exchange-free tail, the same ranks and rounding."""
+    ranked = " UNION ALL ".join(
+        "SELECT source, id, score, row_number() OVER "
+        "(PARTITION BY source ORDER BY score DESC, id ASC) AS rank "
+        f"FROM (SELECT '{source}' AS source, `{id_col}` AS id, score FROM ({leg}))"
+        for source, id_col, leg in legs
+    )
+    rrf = stable_round_spark_sql(f"sum(1.0D / ({int(rrf_k)} + rank))", round_to)
+    return (
+        f"SELECT id, {rrf} AS rrf_score, count(DISTINCT source) AS n_sources "
+        f"FROM (SELECT /*+ COALESCE(1) */ * FROM ({ranked})) "
+        f"GROUP BY id ORDER BY rrf_score DESC, id ASC LIMIT {int(limit)}"
+    )
 
 
 def rrf_fuse_graph_append(

@@ -5,12 +5,18 @@ Reference behavior: ``SearchService.hybrid_search``
 to vector search + BM25 (+ graph seed), RRF-fuse (k=60), optional
 rerank, top-k.
 
-Spark-first: each leg is an independent small top-k DataFrame; the
-fan-out is just two lazy plans unioned by name — Catalyst evaluates
-them in one job, and the fusion groupBy runs over ≤ (legs × k)
-rows. Nothing here shuffles the corpus: the vector leg is a
-TakeOrderedAndProject scan, the BM25 leg touches only the query
-terms' postings.
+Spark-first: each leg is an independent small top-k plan; the
+fan-out is two plans unioned into one query, and the fusion groupBy
+runs over ≤ (legs × k) rows. One query is not one job: under AQE the
+BM25 leg's aggregate exchange is its own query stage, so a traced
+indexed request runs about 2.2 jobs and 3.1 stages. Nothing here
+shuffles the corpus: the vector leg is a TakeOrderedAndProject scan,
+the BM25 leg touches only the query terms' postings.
+
+With ``index_dir`` the whole request is one parameterized SQL
+statement (indexing.bm25_statement / knn_statement under
+fusion.rrf_fuse_legs_sql), built in a handful of gateway calls; the
+Column-operator form of the same plan made about 1,400.
 """
 
 from __future__ import annotations
@@ -19,7 +25,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cocoindex_data_ingestion_spark.operators.bm25 import bm25_search
-from cocoindex_data_ingestion_spark.operators.fusion import rrf_fuse_legs
+from cocoindex_data_ingestion_spark.operators.fusion import (
+    rrf_fuse_legs, rrf_fuse_legs_sql,
+)
 from cocoindex_data_ingestion_spark.operators.vector_search import knn
 
 
@@ -49,42 +57,37 @@ def hybrid_search(
     ad-hoc legs remain the DuckDB-oracle twins."""
     if index_dir is not None:
         from cocoindex_data_ingestion_spark.operators.indexing import (
-            indexed_bm25, indexed_knn,
+            bm25_statement, knn_statement,
         )
 
         if query_vec_df is None:
             raise ValueError("index_dir fast path requires query_vec_df")
         spark = docs.sparkSession
-        vec_leg = indexed_knn(
+        bm25_sql, args = bm25_statement(
+            spark, index_dir, query_terms, k=leg_k, id_col=id_col
+        )
+        vec_sql = knn_statement(
             spark, index_dir, query_vec_df, k=leg_k, id_col=vec_id_col,
             exact=True,
-        ).select(
-            F.lit("vector").alias("source"),
-            F.col(vec_id_col).alias("id"),
-            F.col("score"),
         )
-        bm25_leg = indexed_bm25(
-            spark, index_dir, query_terms, k=leg_k, id_col=id_col
-        ).select(
-            F.lit("bm25").alias("source"),
-            F.col(id_col).alias("id"),
-            F.col("score"),
-        )
-    else:
-        vec_leg = knn(
-            embeddings, query_vec, k=leg_k, vec_col=vec_col, id_col=vec_id_col
-        ).select(
-            F.lit("vector").alias("source"),
-            F.col(vec_id_col).alias("id"),
-            F.col("score"),
-        )
-        bm25_leg = bm25_search(
-            docs, query_terms, k=leg_k, id_col=id_col, text_col=text_col
-        ).select(
-            F.lit("bm25").alias("source"),
-            F.col(id_col).alias("id"),
-            F.col("score"),
-        )
+        return spark.sql(rrf_fuse_legs_sql(
+            [("vector", vec_id_col, vec_sql), ("bm25", id_col, bm25_sql)],
+            limit=k,
+        ), args=args)
+    vec_leg = knn(
+        embeddings, query_vec, k=leg_k, vec_col=vec_col, id_col=vec_id_col
+    ).select(
+        F.lit("vector").alias("source"),
+        F.col(vec_id_col).alias("id"),
+        F.col("score"),
+    )
+    bm25_leg = bm25_search(
+        docs, query_terms, k=leg_k, id_col=id_col, text_col=text_col
+    ).select(
+        F.lit("bm25").alias("source"),
+        F.col(id_col).alias("id"),
+        F.col("score"),
+    )
     # per-leg ranking + exchange-free fusion tail (fusion.rrf_fuse_legs):
     # both legs end in TakeOrderedAndProject (single partition), so the
     # whole hybrid query is ONE physical plan with no post-leg shuffle

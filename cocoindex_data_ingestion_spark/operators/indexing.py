@@ -18,6 +18,18 @@ reference's externalized indexes (Qdrant collections, Postgres GIN):
   operators (same math, same rounding) — the DuckDB oracles are
   shared.
 
+A search request is ONE parameterized ``spark.sql`` statement over
+per-layout views (:func:`bm25_statement`, :func:`knn_statement`),
+not a Column-operator chain: in PySpark 4.1 every Column operator
+costs about 5 gateway round trips (``getActiveSession``, the
+``PySparkCurrentOrigin`` set/clear pair, the conf read, the call), so
+a hybrid request built from Columns made ~1,400 Py4J calls and spent
+half its latency building a plan that runs no Spark job. The
+statement text is the same expression tree in the same order (every
+double literal ``D``-suffixed, because Spark SQL reads ``0.5`` as
+DECIMAL), so plans and scores are unchanged; query terms are bound
+as named parameters, never spliced into the text.
+
 At cluster scale the same layout is a Delta/Iceberg table with
 bucketing on token / z-order on signature; partition pruning is what
 turns O(corpus) per query into O(result).
@@ -25,6 +37,8 @@ turns O(corpus) per query into O(result).
 
 from __future__ import annotations
 
+import hashlib
+import itertools
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -35,8 +49,11 @@ from cocoindex_data_ingestion_spark.functions.parallel import spread_python_stag
 from cocoindex_data_ingestion_spark.functions.localrel import local_df
 
 from cocoindex_data_ingestion_spark.functions.compare import (
+    spark_double,
     stable_round,
+    stable_round_spark_sql,
     stable_sum,
+    stable_sum_spark_sql,
 )
 from cocoindex_data_ingestion_spark.functions.similarity import dot
 from cocoindex_data_ingestion_spark.functions.text import bm25_tokens
@@ -73,6 +90,21 @@ def read_layout(spark: SparkSession, path: str) -> DataFrame:
 
 def invalidate_layout(path_prefix: str) -> None:
     forget(lambda k: k[0] == "layout" and k[1].startswith(path_prefix))
+
+
+def _layout_view(spark: SparkSession, path: str) -> str:
+    """Qualified name of a global temp view over the layout's memoized
+    reader, registered once per layout (global, so every session of
+    the application sees it, as it sees the memo). A rebuilt layout's
+    ``invalidate_layout`` drops the name with the reader; the next
+    request re-registers it over a fresh listing."""
+
+    def build() -> str:
+        name = "layout_" + hashlib.sha1(path.encode()).hexdigest()[:16]
+        read_layout(spark, path).createOrReplaceGlobalTempView(name)
+        return f"`{spark.conf.get('spark.sql.globalTempDatabase')}`.`{name}`"
+
+    return memo(spark, ("layout", path, "view"), build)
 
 
 def _stats_scalars(spark: SparkSession, index_dir: str) -> tuple[int, float]:
@@ -114,13 +146,27 @@ def _qvec_df_of(spark: SparkSession, query_vec) -> DataFrame:
     return query_vec
 
 
+def _qvec_sql(vals: list) -> str:
+    return "array(" + ",".join(spark_double(x) for x in vals) + ")"
+
+
 def _qvec_literal(vals: list) -> Column:
     """array<double> literal built in ONE expression parse — the
     per-element ``F.array(*[F.lit(x)...])`` form costs a py4j round
-    trip per component (~50 ms for 64 dims). ``repr`` round-trips
-    doubles exactly; the ``D`` suffix keeps Spark SQL from typing the
-    literals DECIMAL."""
-    return F.expr("array(" + ",".join(f"{float(x)!r}D" for x in vals) + ")")
+    trip per component (~50 ms for 64 dims)."""
+    return F.expr(_qvec_sql(vals))
+
+
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """Spark SQL twin of ``similarity.dot`` (same operand order)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0.0D, (acc, v) -> acc + v)"
+    )
 
 
 def build_search_index(
@@ -383,32 +429,54 @@ def indexed_bm25(
     No corpus scan, no tokenization. Arithmetic is identical to the
     broadcast form: n_docs stays integral, avgdl stays the stored
     double."""
-    qterms = list(dict.fromkeys(t.lower() for t in query_terms))
-    postings = _query_postings(spark, index_dir, qterms)
-    n_docs, avgdl = _stats_scalars(spark, index_dir)
+    return spark.sql(*bm25_statement(
+        spark, index_dir, query_terms, k=k, id_col=id_col, k1=k1, b=b,
+        round_to=round_to,
+    ))
 
-    scored = (
-        postings
-        .withColumn(
-            "idf",
-            F.log((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(avgdl))),
-        )
-        .groupBy(id_col)
-        # same order-independent fixed-point sum as bm25.bm25_search —
-        # keeps the shared DuckDB oracle bit-identical
-        .agg(stable_round(stable_sum(F.col("term_score"), 6), round_to).alias("score"))
+
+def bm25_statement(
+    spark: SparkSession,
+    index_dir: str,
+    query_terms: list[str],
+    k: int = 10,
+    id_col: str = "doc_id",
+    k1: float = K1,
+    b: float = B,
+    round_to: int = 4,
+) -> tuple[str, dict[str, str]]:
+    """SQL text and named parameters of :func:`indexed_bm25`. The
+    bucket list is static partition pruning, the token IN-list (terms
+    bound as ``:t0, :t1, ...``) pushes into parquet row-group stats;
+    an empty term list reads nothing (``IN ()`` is not SQL)."""
+    qterms = list(dict.fromkeys(t.lower() for t in query_terms))
+    n_docs, avgdl = _stats_scalars(spark, index_dir)
+    args = {f"t{i}": t for i, t in enumerate(qterms)}
+    if qterms:
+        buckets = ", ".join(map(str, _token_buckets_py(qterms)))
+        where = f"tbucket IN ({buckets}) AND token IN ({', '.join(':' + p for p in args)})"
+    else:
+        where = "false"
+    i = _ident(id_col)
+    idf = f"ln(((({int(n_docs)} - df) + 0.5D) / (df + 0.5D)) + 1.0D)"
+    # the Column form's `k1 * (1 - b + b * dl / avgdl)` analyzed as
+    # `((dl * b) / avgdl + (1 - b)) * k1`: a Python scalar on the left
+    # of a Column operator lands on its right
+    d = spark_double
+    term_score = (
+        f"({idf} * (tf * {d(k1 + 1)})) / "
+        f"(tf + ((((dl * {d(b)}) / {d(avgdl)}) + {d(1 - b)}) * {d(k1)}))"
     )
-    return (
-        scored.orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "score")
+    # same order-independent fixed-point sum as bm25.bm25_search —
+    # keeps the shared DuckDB oracle bit-identical
+    score = stable_round_spark_sql(stable_sum_spark_sql("term_score", 6), round_to)
+    text = (
+        f"SELECT {i}, {score} AS score FROM ("
+        f"SELECT {i}, {term_score} AS term_score "
+        f"FROM {_layout_view(spark, f'{index_dir}/postings')} WHERE {where}) "
+        f"GROUP BY {i} ORDER BY score DESC, {i} ASC LIMIT {int(k)}"
     )
+    return text, args
 
 
 def _query_postings(
@@ -523,30 +591,52 @@ def indexed_knn(
     ``query_vec_df`` may also be a plain ``list[float]`` (a service
     holds the request vector in memory): that skips the resolve job
     entirely on the warm path."""
-    import itertools
+    return spark.sql(knn_statement(
+        spark, index_dir, query_vec_df, k=k, lsh_bits=lsh_bits, id_col=id_col,
+        exact=exact, round_to=round_to, multiprobe=multiprobe,
+    ))
 
+
+def knn_statement(
+    spark: SparkSession,
+    index_dir: str,
+    query_vec_df,
+    k: int = 10,
+    lsh_bits: int = 8,
+    id_col: str = "vec_id",
+    exact: bool = False,
+    round_to: int = 4,
+    multiprobe: int = 0,
+) -> str:
+    """SQL text of :func:`indexed_knn`: the query vector is an
+    ``array<double>`` literal and the probe signatures (strings of
+    ``0``/``1`` derived from it) an IN list on the ``sig`` partition
+    column."""
     qvec_vals = _resolve_qvec(query_vec_df)
-    qvec = _qvec_literal(qvec_vals)
-    qsig = "".join("1" if x > 0 else "0" for x in qvec_vals[:lsh_bits])
-
     if exact:
-        vectors = read_layout(spark, f"{index_dir}/vectors")
+        source = _layout_view(spark, f"{index_dir}/vectors")
     else:
+        qsig = "".join("1" if x > 0 else "0" for x in qvec_vals[:lsh_bits])
         probe_sigs = [qsig]
         for d in range(1, multiprobe + 1):
             for flips in itertools.combinations(range(lsh_bits), d):
                 s = list(qsig)
-                for i in flips:
-                    s[i] = "1" if s[i] == "0" else "0"
+                for j in flips:
+                    s[j] = "1" if s[j] == "0" else "0"
                 probe_sigs.append("".join(s))
-        vectors = read_layout(spark, f"{index_dir}/vectors_lsh").filter(
-            F.col("sig").isin(probe_sigs)
+        sigs = ", ".join(f"'{s}'" for s in probe_sigs)
+        source = (
+            f"{_layout_view(spark, f'{index_dir}/vectors_lsh')} WHERE sig IN ({sigs})"
         )
-    scored = _scored_vectors(vectors, qvec, id_col, round_to)
+    q = _qvec_sql(qvec_vals)
+    cos = (
+        f"CASE WHEN norm > 0 THEN {_dot_sql('embedding', q)} / "
+        f"(norm * sqrt({_dot_sql(q, q)})) ELSE 0.0D END"
+    )
+    i = _ident(id_col)
     return (
-        scored.orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "score")
+        f"SELECT {i}, score FROM (SELECT *, {stable_round_spark_sql(cos, round_to)} AS score "
+        f"FROM {source} ORDER BY score DESC, {i} ASC LIMIT {int(k)})"
     )
 
 
@@ -606,8 +696,7 @@ def indexed_knn_ivf(
     vectors = read_layout(spark, f"{index_dir}/vectors_ivf").filter(
         F.col("cent_id").isin(probe_ids)
     )
-    qvec = F.array(*[F.lit(x) for x in qvec_vals])
-    scored = _scored_vectors(vectors, qvec, id_col, round_to)
+    scored = _scored_vectors(vectors, _qvec_literal(qvec_vals), id_col, round_to)
     return (
         scored.orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
@@ -786,8 +875,7 @@ def indexed_knn_ivfpq(
         F.col("cent_id").isin(probe_ids)
     )
     cand = vectors.join(F.broadcast(cand_ids.select(id_col)), id_col)
-    qvec = F.array(*[F.lit(x) for x in qvec_vals])
-    scored = _scored_vectors(cand, qvec, id_col, round_to)
+    scored = _scored_vectors(cand, _qvec_literal(qvec_vals), id_col, round_to)
     return (
         scored.orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)

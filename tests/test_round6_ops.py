@@ -394,3 +394,27 @@ def test_read_layout_invalidated_by_rebuild(spark, tmp_path):
     ).parquet(p)
     indexing.invalidate_layout(str(tmp_path))
     assert indexing.read_layout(spark, p).count() == 2
+
+    # the statement path reads through per-layout views: a rebuild of
+    # the same index_dir must re-register them over the new corpus
+    from cocoindex_data_ingestion_spark.operators import bm25
+
+    def corpus(texts):
+        docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+        emb = spark.createDataFrame(
+            [(i, [1.0, float(i)]) for i in range(len(texts))],
+            "vec_id long, embedding array<float>",
+        )
+        return docs, emb
+
+    idx = str(tmp_path / "idx")
+    terms = ["spark", "index"]
+    for texts in (
+        ["spark spark index", "index only here", "nothing relevant"],
+        ["index spark", "more spark words", "spark index index", "filler text"],
+    ):
+        docs, emb = corpus(texts)
+        indexing.build_search_index(docs, emb, idx, lsh_bits=2)
+        got = [tuple(r) for r in indexing.indexed_bm25(spark, idx, terms).collect()]
+        assert got == [tuple(r) for r in bm25.bm25_search(docs, terms).collect()]
+        assert len(got) == len(texts) - 1

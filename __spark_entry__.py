@@ -12799,8 +12799,8 @@ _ORD_CENTS = "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"
 # path still runs) while the bench row prices the REFRESH CONTRACT,
 # not three full-table OCC bulk loads — unrestricted, the row costs
 # 21.7 s warm at sf0.1 (3x the heaviest ivm_* harness row) with zero
-# extra coverage; the bulk-load slope has its own probe
-# (tools/scaling_probe_r10b.py).
+# extra coverage; the bulk-load slope had its own probe
+# (tools/scaling_probe_r10b.py, deleted; it is in git history).
 _IVM_JOIN_KEYS = "% 3 = 0"
 
 # oracle = the from-scratch join over the FINAL side states (the

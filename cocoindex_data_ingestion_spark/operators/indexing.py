@@ -251,20 +251,22 @@ def build_search_index(
 
     from cocoindex_data_ingestion_spark.functions.similarity import l2_norm
 
-    # norm + LSH signature computed ONCE for both vector layouts
-    # (r11, §1.4): the two writes below are separate actions, so the
-    # un-checkpointed frame re-scanned embeddings and re-evaluated the
-    # signature per write.
+    # norm + LSH signature computed ONCE for both vector layouts: the
+    # flat layout (exact scans, no small-files overhead) is written
+    # first, and the sig-partitioned layout (ANN partition pruning) is
+    # written from a re-read of it — a durable source, unlike a
+    # checkpoint pinning every embedding on the executors. The read
+    # takes the written frame's schema, so no inference job runs.
     vectors = embeddings.select(
         F.col(vec_id_col),
         F.col(vec_col),
         l2_norm(vec_col).alias("norm"),
         lsh_signature(vec_col, lsh_bits).alias("sig"),
-    ).localCheckpoint(eager=True)
-    # flat layout for exact scans (no small-files overhead) +
-    # sig-partitioned layout for ANN partition pruning
+    )
     vectors.write.mode("overwrite").parquet(f"{index_dir}/vectors")
-    vectors.write.mode("overwrite").partitionBy("sig").parquet(
+    spark.read.schema(vectors.schema).parquet(
+        f"{index_dir}/vectors"
+    ).write.mode("overwrite").partitionBy("sig").parquet(
         f"{index_dir}/vectors_lsh"
     )
     invalidate_layout(index_dir)

@@ -136,6 +136,7 @@ class BucketedParquetState:
     concurrent readers never observe a missing file."""
 
     _MANIFEST_RETAIN = 10
+    _MAX_RETRIES = 10  # commit attempts before a writer gives up
 
     def __init__(
         self,
@@ -258,35 +259,22 @@ class BucketedParquetState:
             return self.spark.createDataFrame([], self.schema_ddl)
         return self.spark.read.parquet(*paths)
 
-    def read_keys(
-        self, keys: DataFrame, buckets: list[int] | None = None
-    ) -> DataFrame:
+    def read_keys(self, keys: DataFrame) -> DataFrame:
         """Current rows for the given keys: bucket-pruned read +
-        semi-join (O(touched buckets), not O(state)).
-
-        ``buckets``: the keys' pre-computed bucket ids (r10: callers
-        that already collected the bucket set of a checkpointed delta
-        — e.g. MaterializedJoin, whose side states share key + bucket
-        count — pass it here to skip a redundant distinct+collect
-        job)."""
+        semi-join (O(touched buckets), not O(state))."""
         if not self._manifest()["buckets"]:
             # empty state: skip the bucket-collect job entirely (a
             # first IVM batch otherwise pays a full scan of `keys`
             # just to learn there is nothing to read)
             return self.spark.createDataFrame([], self.schema_ddl)
-        if buckets is None:
-            buckets = self._touched_buckets(keys)
-        return self.read(buckets).join(
+        return self.read(self._touched_buckets(keys)).join(
             keys.select(self.key_col).distinct(), self.key_col, "left_semi"
         )
 
     # -- write ------------------------------------------------------------
 
     def merge(
-        self,
-        upserts: DataFrame,
-        delete_keys: DataFrame | None = None,
-        max_retries: int = 10,
+        self, upserts: DataFrame, delete_keys: DataFrame | None = None
     ) -> list[int]:
         """Upsert rows (full replacement per key) + delete keys.
         Rewrites only the touched buckets; returns their ids.
@@ -295,8 +283,6 @@ class BucketedParquetState:
         snapshot, and the commit CAS detects whether any *touched*
         bucket moved since that snapshot — disjoint-bucket winners
         cause a cheap rebase, overlapping ones a full recompute."""
-        import uuid
-
         key = self.key_col
         changed_keys = upserts.select(key)
         if delete_keys is not None:
@@ -312,115 +298,36 @@ class BucketedParquetState:
                 upserts.select(*cur.columns), allowMissingColumns=True
             )
 
-        return self._occ_write(touched, build_out, max_retries, op="merge")
-
-    def fold_merge(
-        self,
-        delta: DataFrame,
-        fold,
-        keep: F.Column,
-        max_retries: int = 10,
-        join_on: list[str] | None = None,
-        touched: list[int] | None = None,
-    ) -> list[int]:
-        """MERGE with computed updates in ONE state pass per attempt.
-
-        :meth:`merge` needs its caller to pre-join current state with
-        the delta to compute the new rows, so an IVM refresh pays two
-        bucket-pruned state reads per batch (the caller's join + the
-        survivor rewrite). This variant moves the fold INTO the
-        rewrite — the same idea as a RocksDB merge operator or Delta
-        MERGE's matched clauses: per attempt the touched buckets are
-        read ONCE, full_outer-joined with ``delta`` (aliases ``c`` =
-        current row, ``d`` = delta row), ``fold(joined)`` projects the
-        new full state rows (must include ``key_col``), and the
-        ``keep`` Column decides which folded rows are written (keys
-        folding to not-keep disappear by not being rewritten —
-        deletes). Current rows whose key has no delta row flow
-        through the fold with ``d``-side nulls, so the fold's
-        arithmetic must be identity on them (coalesce-to-zero deltas
-        do this naturally).
-
-        ``delta`` must be small and pre-materialized
-        (``localCheckpoint``): it is evaluated once for the touched-
-        bucket set and once per attempt for the join. Measured on the
-        streaming IVM bench: one state read+listing per batch instead
-        of two (profile in SCALING.md `foreach_batch_ivm floor`).
-
-        ``join_on`` (default ``[key_col]``): the full_outer join
-        columns. States whose rows are NOT unique per ``key_col``
-        (e.g. a join-side multiset bucketed by join key with one row
-        per (key, payload)) pass the full uniqueness tuple here —
-        bucket pruning still runs on ``key_col`` alone, so the state
-        keeps its pruned-read property while the fold stays a
-        one-pass merge (r10: MaterializedJoin's side states, which
-        previously paid the read_keys + checkpoint + merge + gone
-        five-action path per side per batch). The multi-column join
-        is NULL-SAFE (``<=>``) so NULL payload values unify the way
-        a groupBy would — which means the fold receives QUALIFIED
-        ``c.``/``d.`` copies of the join columns and must coalesce
-        them itself (unlike the default name join, whose output is
-        USING-coalesced).
-
-        ``touched``: the delta's pre-computed bucket ids (r10: skips
-        this method's own distinct+collect job when the caller
-        already knows them — must be exactly the bucket set of
-        ``delta``'s keys, or buckets outside it keep stale rows)."""
-        key = self.key_col
-        touched = sorted(
-            self._touched_buckets(delta) if touched is None else touched
-        )
-        if not touched:
-            return []
-
-        def build_out():
-            cur = self.read(touched)
-            # full_outer cannot build a broadcast side — both inputs
-            # here are small (touched buckets + checkpointed delta),
-            # so the single shuffle is the honest plan
-            if join_on is None:
-                joined = cur.alias("c").join(delta.alias("d"), key,
-                                             "full_outer")
-            else:
-                import functools
-
-                cond = functools.reduce(
-                    lambda a, b: a & b,
-                    [
-                        F.col(f"c.{n}").eqNullSafe(F.col(f"d.{n}"))
-                        for n in join_on
-                    ],
-                )
-                joined = cur.alias("c").join(
-                    delta.alias("d"), cond, "full_outer"
-                )
-            return fold(joined).filter(keep)
-
-        return self._occ_write(touched, build_out, max_retries,
-                               op="fold_merge")
+        return self._occ_write(touched, build_out, op="merge")
 
     def fold_merge_sum(
         self,
         delta: DataFrame,
         on: list[str],
         sum_cols: tuple[str, ...] = ("m",),
-        keep_col: str | None = None,
-        max_retries: int = 10,
         touched: list[int] | None = None,
     ) -> list[int]:
-        """:meth:`fold_merge` specialized to the signed sum fold (the
-        MaterializedJoin/Distinct/Quantile/sum-Agg state shape): rows
-        are unique per the ``on`` tuple, every other column is summed
-        (``sum_cols``, integral columns kept bigint, doubles kept
-        double); rows whose ``keep_col`` (default ``sum_cols[0]``)
-        folds to <= 0 disappear. A plain ``union + groupBy`` computes
-        that fold with ONE exchange where the generic path's
-        full_outer join needs two-sided shuffles — and groupBy's
-        NULL-grouping already matches the null-safe join semantics.
-        The two-term add per group is order-independent for doubles
-        too (IEEE addition is commutative), so results are identical
-        to the coalesce-and-add fold. ``on`` + ``sum_cols`` must
-        cover every state column; ``touched`` as in fold_merge."""
+        """MERGE of a signed delta in ONE state pass per attempt: the
+        touched buckets are read once, unioned with ``delta`` and
+        groupBy-summed per ``on`` tuple, and rewritten. Rows are unique
+        per ``on``; every other column is summed (``sum_cols``,
+        integral columns kept bigint, doubles kept double); rows whose
+        ``sum_cols[0]`` folds to <= 0 disappear (deletes). This is the
+        shape of every invertible view state (count/sum aggregates,
+        distinct support, quantile cells, join sides and join view).
+
+        One union + groupBy is one exchange, and groupBy's NULL
+        grouping unifies NULL payload values the way a null-safe join
+        would. The two-term add per group is order-independent for
+        doubles too (IEEE addition is commutative). ``on`` +
+        ``sum_cols`` must cover every state column.
+
+        ``delta`` must be small and pre-materialized
+        (``localCheckpoint``): it is evaluated once for the touched-
+        bucket set and once per attempt for the rewrite. ``touched``:
+        the delta's bucket ids when the caller already collected them
+        — exactly the bucket set of ``delta``'s keys, or buckets
+        outside it keep stale rows."""
         touched = sorted(
             self._touched_buckets(delta) if touched is None else touched
         )
@@ -434,7 +341,6 @@ class BucketedParquetState:
                 f" state column (non-summed: {cols})"
             )
         types = dict(empty.dtypes)
-        keep_col = keep_col or sum_cols[0]
 
         def build_out():
             cur = self.read(touched).select(*cols, *sum_cols)
@@ -444,23 +350,20 @@ class BucketedParquetState:
                 .agg(*[
                     F.sum(c).cast(types[c]).alias(c) for c in sum_cols
                 ])
-                .filter(F.col(keep_col) > 0)
+                .filter(F.col(sum_cols[0]) > 0)
                 .select(*cols, *sum_cols)
             )
 
-        return self._occ_write(touched, build_out, max_retries,
-                               op="fold_merge_sum")
+        return self._occ_write(touched, build_out, op="fold_merge_sum")
 
-    def _occ_write(
-        self, touched: list[int], build_out, max_retries: int, op: str
-    ) -> list[int]:
+    def _occ_write(self, touched: list[int], build_out, op: str) -> list[int]:
         """Shared OCC write/commit loop: write ``build_out()`` (full
         replacement rows for the touched buckets) into a fresh
         generation, then CAS the manifest — rebase on disjoint-bucket
         winners, recompute on overlap."""
         import uuid
 
-        for _attempt in range(max_retries):
+        for _attempt in range(self._MAX_RETRIES):
             snapshot = self._manifest()
             out = build_out().withColumn(
                 "_bucket", self._bucket_of(F.col(self.key_col))
@@ -513,11 +416,12 @@ class BucketedParquetState:
                 # winner touched only other buckets: rebase and re-CAS
                 base = latest
         raise RuntimeError(
-            f"BucketedParquetState.{op}: lost the commit race {max_retries}"
+            f"BucketedParquetState.{op}: lost the commit race"
+            f" {self._MAX_RETRIES}"
             f" times on overlapping buckets {touched} — giving up"
         )
 
-    def overwrite(self, df: DataFrame, max_retries: int = 10) -> None:
+    def overwrite(self, df: DataFrame) -> None:
         """Full rewrite (initial load / compaction). Overwrite always
         wins semantically, so a lost CAS just re-claims the next seq
         without rewriting data."""
@@ -538,7 +442,7 @@ class BucketedParquetState:
             for d in os.listdir(gen_dir)
             if d.startswith("_bucket=")
         }
-        for _attempt in range(max_retries):
+        for _attempt in range(self._MAX_RETRIES):
             base = self._manifest()
             manifest = {
                 "seq": base["seq"] + 1,
@@ -549,7 +453,7 @@ class BucketedParquetState:
                 return
         raise RuntimeError(
             f"BucketedParquetState.overwrite: lost the commit race"
-            f" {max_retries} times — giving up"
+            f" {self._MAX_RETRIES} times — giving up"
         )
 
     def vacuum(self, include_recent: bool = False) -> list[str]:

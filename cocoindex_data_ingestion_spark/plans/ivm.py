@@ -1,5 +1,5 @@
-"""Incremental view maintenance: delta-maintained materialized
-aggregates.
+"""Incremental view maintenance: materialized views kept fresh by
+folding insert/delete deltas into bucketed state.
 
 The reference recomputes per-ROW results incrementally (ordinal skip
 + memoization, src/execution/row_indexer.rs) but has no incremental
@@ -7,35 +7,42 @@ AGGREGATE story — every aggregate its app layer shows (BM25 corpus
 stats, entity counts, search stats) is recomputed from scratch. At
 100 TB that's the difference between scanning the delta and scanning
 the corpus, so this module adds the classic IVM construction on top
-of the same tracking/state machinery:
+of the same state machinery. Every view keeps its rows in a
+:class:`..plans.incremental.BucketedParquetState` keyed by its group
+(or composite) key, and a refresh takes one of two routes, by whether
+the view's partials can be subtracted:
 
-- A **materialized aggregate** ``GROUP BY g: count, sum(x)...`` is
-  kept in a :class:`..plans.incremental.BucketedParquetState` keyed
-  by the group columns.
-- A **refresh** computes the same partial aggregates over the delta
-  only (inserts positive, deletes negative — the standard
-  delta-multiset encoding), merges them with the stored partials of
-  the AFFECTED groups (bucket-pruned read), and commits only those
-  buckets. Cost per refresh: O(|delta| + touched buckets), never
-  O(corpus).
-- Maintainable aggregates here: ``count``, ``sum`` (and anything
-  derivable: avg = sum/count), plus ``min``/``max`` with the classic
-  split strategy: inserts merge with ``least``/``greatest`` (pure
-  delta work), while deletes trigger a **recompute of the affected
-  groups only** from the base table (min/max are not invertible —
-  removing the current extremum requires the runner-up). The
-  recompute reads base rows for the deleted groups (a pushed-down
-  predicate; partition pruning when the base is laid out by group),
-  never the whole corpus.
+- **Invertible views** — ``MaterializedAgg`` count/sum,
+  ``MaterializedDistinct``, ``MaterializedQuantile`` and the
+  ``MaterializedJoin`` sides and view. :func:`_signed_delta` turns the
+  batch into ONE signed delta: per-key partials of the inserts with
+  sign +1 and of the deletes with sign −1 (the standard delta-multiset
+  encoding), unioned, re-summed per key and checkpointed.
+  ``fold_merge_sum`` then adds it into the touched buckets in one
+  pass; keys whose count folds to 0 disappear.
+- **Non-invertible views** — ``MaterializedAgg`` with min/max and
+  ``MaterializedTopK``: removing an extremum or a top-k member needs
+  the runner-up, which the state no longer holds.
+  :func:`_recompute_merge` recomputes the groups that saw deletes from
+  the ``base`` rows of those groups alone (a pushed-down predicate;
+  partition pruning when the base is laid out by group), combines the
+  inserts with the other touched groups' current rows (a
+  bucket-pruned ``read_keys``), checkpoints the result and ``merge``s
+  it, deleting the groups that emptied. It reads state twice per
+  refresh (``read_keys`` and the merge rewrite).
 
-Merging partials is associative + commutative, so the refresh result
-is independent of delta batching/order — the equivalence contract
-(state after any sequence of refreshes == one-shot groupBy over the
-final table) is pinned in tests/test_incremental.py and oracled
-end-to-end by the ``ivm_materialized_agg`` registry query.
+Cost per refresh on either route: O(|delta| + touched buckets), never
+O(corpus). Both folds are associative + commutative, so the view
+after any sequence of refreshes equals a one-shot computation over the
+final relation — pinned in tests/test_incremental.py and
+tests/test_properties.py, and oracled end to end by the ``ivm_*``
+registry queries.
 """
 
 from __future__ import annotations
+
+import functools
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,9 +50,133 @@ from pyspark.sql import functions as F
 from cocoindex_data_ingestion_spark.plans.incremental import BucketedParquetState
 
 
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    return functools.reduce(lambda a, b: a.unionByName(b), dfs)
+
+
+def _sum_by(
+    df: DataFrame, on: list[str], sums: dict[str, str], *extra
+) -> DataFrame:
+    """``df`` grouped by ``on``: every ``sums`` column (name → SQL
+    type) summed and cast back to its type, then ``extra`` aggregates."""
+    return df.groupBy(*on).agg(
+        *[F.sum(c).cast(t).alias(c) for c, t in sums.items()], *extra
+    )
+
+
+def _signed_counts(rows: DataFrame, sign: int, col: str) -> DataFrame:
+    """One row per distinct row of ``rows`` with its count times
+    ``sign`` in ``col``."""
+    return rows.groupBy(*rows.columns).agg(
+        (F.lit(sign) * F.count("*")).cast("bigint").alias(col)
+    )
+
+
+def _signed_parts(
+    inserts: DataFrame | None,
+    deletes: DataFrame | None,
+    partials: Callable[[DataFrame, int], DataFrame],
+) -> list[DataFrame]:
+    """``partials(rows, sign)`` of the inserts (+1) and the deletes
+    (−1), for those given."""
+    return [
+        partials(df, sign)
+        for df, sign in ((inserts, +1), (deletes, -1))
+        if df is not None
+    ]
+
+
+def _signed_delta(
+    parts: list[DataFrame],
+    on: list[str],
+    sums: dict[str, str],
+    finish: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame | None:
+    """The invertible route's delta: signed partials ``parts`` unioned,
+    re-summed per ``on`` key (:func:`_sum_by`), passed through the
+    view's own ``finish`` (filter, composite key) and checkpointed.
+    None when there are no parts.
+
+    The checkpoint is bounded by the batch's distinct keys, never its
+    row count. Without it every later action (the touched-bucket
+    collect, the generation write, a cross read) re-scans and
+    re-shuffles the whole micro-batch. Truncated lineage is safe: on a
+    failed or lost-executor replay the streaming fence
+    (events.foreach_batch_ivm) re-runs the batch as a whole."""
+    if not parts:
+        return None
+    delta = _sum_by(_union(parts), on, sums)
+    if finish is not None:
+        delta = finish(delta)
+    return delta.localCheckpoint(eager=True)
+
+
+def _nonzero(delta: DataFrame) -> DataFrame:
+    return delta.filter(F.col("m") != 0)
+
+
+def _recompute_merge(
+    state: BucketedParquetState,
+    inserts: DataFrame | None,
+    deletes: DataFrame | None,
+    base: DataFrame | None,
+    rows: Callable[[DataFrame], DataFrame],
+    combine: Callable[[DataFrame], DataFrame],
+    what: str,
+) -> None:
+    """The non-invertible route. ``rows(df)`` maps relation rows (group
+    column already cast to string) to state-shaped rows; ``combine``
+    reduces state-shaped rows to the state of each group, and must
+    satisfy ``combine(combine(A) ∪ B) == combine(A ∪ B)``.
+
+    1. Groups with deletes are recomputed from ``rows`` of their
+       ``base`` rows (``base`` = the full relation AFTER this batch).
+    2. The inserts of the other groups are combined with those groups'
+       current state rows.
+    3. The result (bounded by touched groups) is checkpointed, because
+       the merge evaluates it twice.
+    4. ``merge`` rewrites the touched groups, deleting those that
+       emptied (deleted groups with no base row left)."""
+    if deletes is not None and base is None:
+        raise ValueError(
+            f"{what} maintenance needs `base` to recompute deleted"
+            f" groups (the view is not invertible)"
+        )
+    g = state.key_col
+
+    def by_group(df: DataFrame) -> DataFrame:
+        return df.withColumn(g, F.col(g).cast("string"))
+
+    parts, touched = [], []
+    del_groups = None
+    if deletes is not None:
+        del_groups = by_group(deletes).select(g).distinct()
+        touched.append(del_groups)
+        parts.append(rows(by_group(base).join(del_groups, g, "left_semi")))
+    if inserts is not None:
+        ins = by_group(inserts)
+        touched.append(ins.select(g).distinct())
+        if del_groups is not None:
+            # the recompute already covers groups that also saw deletes
+            ins = ins.join(del_groups, g, "left_anti")
+        current = state.read_keys(ins.select(g).distinct())
+        parts.append(current.unionByName(rows(ins)))
+    if not parts:
+        return
+    out = combine(_union(parts)).localCheckpoint(eager=True)
+    gone = _union(touched).distinct().join(
+        out.select(g).distinct(), g, "left_anti"
+    )
+    state.merge(out, delete_keys=gone)
+
+
 class MaterializedAgg:
-    """``SELECT group_col, count(*), sum(vals...) GROUP BY group_col``
-    maintained under insert/delete deltas.
+    """``SELECT group_col, count(*), sum(vals...) [, min/max(cols...)]
+    GROUP BY group_col`` maintained under insert/delete deltas.
+
+    Count/sum views take the invertible route. With ``minmax_cols``
+    the view takes the non-invertible route (min/max cannot be
+    subtracted), and deletes need ``base``.
 
     Groups whose count reaches 0 are deleted from the state (so the
     view never reports empty groups, matching the SQL semantics)."""
@@ -63,9 +194,11 @@ class MaterializedAgg:
         self.group_col = group_col
         self.sum_cols = sum_cols
         self.minmax_cols = minmax_cols
+        # the summed state columns and their types
+        self._sums = {"n": "bigint", **{f"sum_{c}": "double" for c in sum_cols}}
         schema = ", ".join(
-            [f"{group_col} string", "n bigint"]
-            + [f"sum_{c} double" for c in sum_cols]
+            [f"{group_col} string"]
+            + [f"{c} {t}" for c, t in self._sums.items()]
             + [
                 f"{agg}_{c} double"
                 for c in minmax_cols
@@ -76,13 +209,20 @@ class MaterializedAgg:
             spark, path, schema, key_col=group_col, n_buckets=n_buckets
         )
 
-    # -- delta aggregation -------------------------------------------------
+    def _extrema(self, col: Callable[[str, str], F.Column]) -> list:
+        """``min_c`` / ``max_c`` aggregates of ``col(agg, c)`` for each
+        min/max column ``c``."""
+        return [
+            fn(col(a, c)).alias(f"{a}_{c}")
+            for c in self.minmax_cols
+            for a, fn in (("min", F.min), ("max", F.max))
+        ]
 
     def _partials(self, delta: DataFrame, sign: int) -> DataFrame:
         aggs = [F.sum(F.lit(sign)).cast("bigint").alias("n")] + [
             (F.lit(sign) * F.sum(F.col(c))).cast("double").alias(f"sum_{c}")
             for c in self.sum_cols
-        ]
+        ] + self._extrema(lambda _a, c: F.col(c).cast("double"))
         return (
             delta.groupBy(F.col(self.group_col).cast("string").alias(self.group_col))
             .agg(*aggs)
@@ -99,139 +239,25 @@ class MaterializedAgg:
 
         ``base`` — the CURRENT full relation (after this batch's
         deltas are applied) — is required only when ``minmax_cols``
-        are maintained and ``deletes`` is non-empty: deleted groups'
-        min/max are recomputed from the base rows of those groups
-        alone (semi-join → pushed-down group predicate), since an
-        extremum removal needs the runner-up."""
-        if self.minmax_cols and deletes is not None and base is None:
-            raise ValueError(
-                "min/max maintenance needs `base` to recompute deleted"
-                " groups (extrema are not invertible)"
-            )
-        parts = []
-        if inserts is not None:
-            parts.append(self._partials(inserts, +1))
-        if deletes is not None:
-            parts.append(self._partials(deletes, -1))
-        if not parts:
-            return
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
-        # one partial-aggregating shuffle over the DELTA only
-        sum_aliases = [f"sum_{c}" for c in self.sum_cols]
-        delta = delta.groupBy(self.group_col).agg(
-            F.sum("n").cast("bigint").alias("n"),
-            *[F.sum(a).cast("double").alias(a) for a in sum_aliases],
-        )
-        # Materialize the aggregated delta ONCE (one row per group in
-        # the batch — bounded by group cardinality, never delta size).
-        # Without this, every downstream action (read_keys' bucket
-        # collect, merge's touched-bucket collect, the generation
-        # write) re-scans and re-shuffles the whole micro-batch:
-        # profiled at 20 jobs / 2-3 s per warm batch at sf0.1, which
-        # is exactly the conf-insensitive floor the r6 tuned bench
-        # row exposed. On a failed/lost-executor replay the streaming
-        # fence (foreach_batch_ivm) re-runs the batch, so truncated
-        # lineage is safe here.
-        delta = delta.localCheckpoint(eager=True)
-
+        are maintained and ``deletes`` is non-empty: deleted groups
+        are recomputed from the base rows of those groups alone,
+        since an extremum removal needs the runner-up."""
         g = self.group_col
-        mm_aliases = [
-            f"{agg}_{c}" for c in self.minmax_cols for agg in ("min", "max")
-        ]
-        mm_cols: list = []
         if self.minmax_cols:
-            # inserts merge with least/greatest; deleted groups are
-            # overridden by a recompute over base rows of those groups
-            ins_mm = None
-            if inserts is not None:
-                ins_mm = inserts.groupBy(
-                    F.col(g).cast("string").alias(g)
-                ).agg(
-                    *[
-                        agg_fn(F.col(c).cast("double")).alias(f"i_{agg}_{c}")
-                        for c in self.minmax_cols
-                        for agg, agg_fn in (("min", F.min), ("max", F.max))
-                    ]
-                ).localCheckpoint(eager=True)  # same bound as delta
-            re_mm = None
-            if deletes is not None:
-                del_groups = deletes.select(
-                    F.col(g).cast("string").alias(g)
-                ).distinct()
-                re_mm = (
-                    base.withColumn(g, F.col(g).cast("string"))
-                    .join(del_groups, g, "left_semi")
-                    .groupBy(g)
-                    .agg(
-                        *[
-                            agg_fn(F.col(c).cast("double")).alias(f"r_{agg}_{c}")
-                            for c in self.minmax_cols
-                            for agg, agg_fn in (("min", F.min), ("max", F.max))
-                        ]
-                    )
-                )
-            for c in self.minmax_cols:
-                for agg, comb in (("min", F.least), ("max", F.greatest)):
-                    a = f"{agg}_{c}"
-                    cur_v = F.col(f"c.{a}")
-                    ins_v = F.col(f"i.i_{a}") if ins_mm is not None else F.lit(None)
-                    fresh = F.coalesce(comb(cur_v, ins_v), cur_v, ins_v)
-                    if re_mm is not None:
-                        # recomputed value wins for deleted groups —
-                        # including NULL-out when the group emptied
-                        # (row then dropped by the n<=0 filter anyway)
-                        fresh = F.when(
-                            F.col("_recomputed"), F.col(f"r.r_{a}")
-                        ).otherwise(fresh)
-                    mm_cols.append(fresh.alias(a))
-
-        # Pure count/sum views fold with the one-exchange signed-sum
-        # specialization (r10); only the minmax split strategy needs
-        # the generic join fold below.
-        if not self.minmax_cols:
-            self.state.fold_merge_sum(
-                delta, on=[g], sum_cols=("n", *sum_aliases),
+            _recompute_merge(
+                self.state, inserts, deletes, base, what="min/max",
+                rows=lambda df: self._partials(df, +1),
+                combine=lambda cand: _sum_by(
+                    cand, [g], self._sums,
+                    *self._extrema(lambda a, c: F.col(f"{a}_{c}")),
+                ),
             )
             return
-
-        # fold_merge: the current-state read, the fold arithmetic, and
-        # the generation rewrite happen in ONE pass over the touched
-        # buckets (one bucket-pruned read + one write per batch —
-        # refresh previously paid a second full read for its own
-        # pre-merge join; see the floor profile in SCALING.md).
-        # Survivor rows (current key with no delta row) flow through
-        # with d-side nulls: the coalesce-to-zero arithmetic is an
-        # identity on them, and the minmax `fresh` coalesce keeps the
-        # current extrema when no insert/recompute row exists.
-        def fold(joined: DataFrame) -> DataFrame:
-            j = joined
-            if self.minmax_cols and inserts is not None:
-                j = j.join(F.broadcast(ins_mm.alias("i")), g, "left_outer")
-            if self.minmax_cols and deletes is not None:
-                j = j.join(
-                    re_mm.withColumn("_rec", F.lit(True)).alias("r"),
-                    g,
-                    "left_outer",
-                ).withColumn(
-                    "_recomputed", F.coalesce(F.col("r._rec"), F.lit(False))
-                )
-            elif self.minmax_cols:
-                j = j.withColumn("_recomputed", F.lit(False))
-            return j.select(
-                F.col(g),
-                (F.coalesce(F.col("c.n"), F.lit(0))
-                 + F.coalesce(F.col("d.n"), F.lit(0))).alias("n"),
-                *[
-                    (F.coalesce(F.col(f"c.{a}"), F.lit(0.0))
-                     + F.coalesce(F.col(f"d.{a}"), F.lit(0.0))).alias(a)
-                    for a in sum_aliases
-                ],
-                *mm_cols,
-            )
-
-        self.state.fold_merge(delta, fold, keep=F.col("n") > 0)
+        delta = _signed_delta(
+            _signed_parts(inserts, deletes, self._partials), [g], self._sums
+        )
+        if delta is not None:
+            self.state.fold_merge_sum(delta, on=[g], sum_cols=tuple(self._sums))
 
     def read(self) -> DataFrame:
         return self.state.read()
@@ -275,14 +301,12 @@ class MaterializedDistinct:
 
     def _partials(self, delta: DataFrame, sign: int) -> DataFrame:
         g, v = self.group_col, self.value_col
-        return (
+        return _signed_counts(
             delta.select(
                 F.col(g).cast("string").alias(g),
                 F.col(v).cast("string").alias(v),
-            )
-            .filter(F.col(v).isNotNull())
-            .groupBy(g, v)
-            .agg((F.lit(sign) * F.count("*")).cast("bigint").alias("m"))
+            ).filter(F.col(v).isNotNull()),
+            sign, "m",
         )
 
     def refresh(
@@ -290,30 +314,16 @@ class MaterializedDistinct:
         inserts: DataFrame | None = None,
         deletes: DataFrame | None = None,
     ) -> None:
-        parts = []
-        if inserts is not None:
-            parts.append(self._partials(inserts, +1))
-        if deletes is not None:
-            parts.append(self._partials(deletes, -1))
-        if not parts:
-            return
         g, v = self.group_col, self.value_col
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
-        delta = (
-            delta.groupBy(g, v)
-            .agg(F.sum("m").cast("bigint").alias("m"))
-            .withColumn("k", F.concat_ws(self._SEP, F.col(g), F.col(v)))
+        delta = _signed_delta(
+            _signed_parts(inserts, deletes, self._partials),
+            [g, v], {"m": "bigint"},
+            finish=lambda d: d.withColumn(
+                "k", F.concat_ws(self._SEP, F.col(g), F.col(v))
+            ),
         )
-        # one-pass fold (same job-count rationale as MaterializedAgg:
-        # checkpoint the bounded multiplicity delta once, then a
-        # single bucket-pruned state read + rewrite per batch)
-        delta = delta.localCheckpoint(eager=True)
-
-        # signed-sum fold: one union+groupBy exchange instead of the
-        # generic full_outer join's two-sided shuffle (r10)
-        self.state.fold_merge_sum(delta, on=["k", g, v])
+        if delta is not None:
+            self.state.fold_merge_sum(delta, on=["k", g, v])
 
     def read_support(self) -> DataFrame:
         return self.state.read()
@@ -332,8 +342,9 @@ class MaterializedTopK:
     /-per-key-best query on the surface (top_customer_per_nation,
     search suggestion tables, per-collection best chunks).
 
-    Maintenance rules (top-k is a mergeable but non-invertible
-    sketch, same split as min/max in :class:`MaterializedAgg`):
+    Top-k is a mergeable but non-invertible sketch, so the view takes
+    the non-invertible route (same as min/max in
+    :class:`MaterializedAgg`):
 
     - **inserts only**: ``topk(stored ∪ delta)`` — pure delta work,
       because ``topk(A ∪ B) == topk(topk(A) ∪ B)`` (any row evicted
@@ -341,9 +352,8 @@ class MaterializedTopK:
       present). One bucket-pruned read of the affected groups.
     - **any delete in a group**: the stored list may lose a member
       whose runner-up was evicted long ago, so the group is
-      recomputed from ``base`` rows of that group alone (semi-join →
-      pushed-down group predicate / partition pruning on a
-      group-partitioned base). Never a full rescan.
+      recomputed from ``base`` rows of that group alone. Never a full
+      rescan.
 
     Row identity is ``id_col`` (unique per relation row); ordering is
     (score desc, id asc) so the list is deterministic under ties.
@@ -384,55 +394,20 @@ class MaterializedTopK:
         """``base`` (the full relation AFTER this batch) is required
         when ``deletes`` is non-empty — evicted runner-ups make
         deletion non-invertible."""
-        if deletes is not None and base is None:
-            raise ValueError(
-                "top-k maintenance needs `base` to recompute deleted"
-                " groups (evicted runner-ups are unrecoverable)"
-            )
         from pyspark.sql import Window
 
-        g = self.group_col
-        parts = []
-        del_groups = None
-        if deletes is not None:
-            del_groups = self._norm(deletes).select(g).distinct()
-            parts.append(self._norm(base).join(del_groups, g, "left_semi"))
-        if inserts is not None:
-            ins = self._norm(inserts)
-            if del_groups is not None:
-                # recompute wins for groups that also saw deletes
-                ins = ins.join(del_groups, g, "left_anti")
-            current = self.state.read_keys(ins.select(g).distinct())
-            parts.append(current.unionByName(ins))
-        if not parts:
-            return
-        cand = parts[0]
-        for p in parts[1:]:
-            cand = cand.unionByName(p)
-        w = Window.partitionBy(g).orderBy(
+        w = Window.partitionBy(self.group_col).orderBy(
             F.col(self.score_col).desc(), F.col(self.id_col).asc()
         )
-        topk = (
-            cand.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= self.k)
-            .drop("_rn")
-            # bounded (affected groups × k); checkpoint so the merge's
-            # touched-bucket collect, the `gone` anti-join, and the
-            # generation write don't each re-run the window over the
-            # state read + delta union
-            .localCheckpoint(eager=True)
+        _recompute_merge(
+            self.state, inserts, deletes, base, what="top-k",
+            rows=self._norm,
+            combine=lambda cand: (
+                cand.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") <= self.k)
+                .drop("_rn")
+            ),
         )
-        affected = topk.sparkSession.createDataFrame([], f"{g} string")
-        if del_groups is not None:
-            affected = affected.unionByName(del_groups)
-        if inserts is not None:
-            affected = affected.unionByName(
-                self._norm(inserts).select(g).distinct()
-            )
-        gone = affected.distinct().join(
-            topk.select(g).distinct(), g, "left_anti"
-        )
-        self.state.merge(topk, delete_keys=gone)
 
     def read(self) -> DataFrame:
         return self.state.read()
@@ -566,15 +541,14 @@ class MaterializedQuantile:
         )
 
         g = self.group_col
-        return (
+        return _signed_counts(
             delta.select(
                 F.col(g).cast("string").alias(g),
                 F.col(self.value_col).alias("_v"),
             )
             .filter(F.col("_v").isNotNull())
-            .select(g, F.expr(_qsk_bucket_expr("_v")).alias("bucket"))
-            .groupBy(g, "bucket")
-            .agg((F.lit(sign) * F.count("*")).cast("bigint").alias("cnt"))
+            .select(g, F.expr(_qsk_bucket_expr("_v")).alias("bucket")),
+            sign, "cnt",
         )
 
     def refresh(
@@ -582,34 +556,18 @@ class MaterializedQuantile:
         inserts: DataFrame | None = None,
         deletes: DataFrame | None = None,
     ) -> None:
-        parts = []
-        if inserts is not None:
-            parts.append(self._partials(inserts, +1))
-        if deletes is not None:
-            parts.append(self._partials(deletes, -1))
-        if not parts:
-            return
         g = self.group_col
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
-        delta = (
-            delta.groupBy(g, "bucket")
-            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            .withColumn(
-                "k",
-                F.concat_ws(self._SEP, F.col(g), F.col("bucket")),
+        delta = _signed_delta(
+            _signed_parts(inserts, deletes, self._partials),
+            [g, "bucket"], {"cnt": "bigint"},
+            finish=lambda d: d.withColumn(
+                "k", F.concat_ws(self._SEP, F.col(g), F.col("bucket"))
+            ),
+        )
+        if delta is not None:
+            self.state.fold_merge_sum(
+                delta, on=["k", g, "bucket"], sum_cols=("cnt",)
             )
-        )
-        # bounded delta (groups × touched buckets), checkpointed once
-        # — the MaterializedAgg/Distinct job-count rationale
-        delta = delta.localCheckpoint(eager=True)
-
-        # signed-sum fold: one union+groupBy exchange instead of the
-        # generic full_outer join's two-sided shuffle (r10)
-        self.state.fold_merge_sum(
-            delta, on=["k", g, "bucket"], sum_cols=("cnt",)
-        )
 
     def read_cells(self) -> DataFrame:
         return self.state.read()
@@ -657,8 +615,8 @@ class MaterializedJoin:
     - ``a`` / ``b`` — the side multisets, one row per distinct
       (key, payload...) with multiplicity ``m``, BUCKETED BY THE JOIN
       KEY so the delta rule's cross reads (current B rows for ΔA's
-      keys, current A rows for ΔB's keys) are bucket-pruned
-      ``read_keys`` lookups — O(touched keys), never O(side).
+      keys, current A rows for ΔB's keys) are bucket-pruned reads of
+      the delta's key buckets — O(touched buckets), never O(side).
     - ``view`` — one row per distinct joined row keyed by the full
       row composite, fold-merged with the signed view delta; rows
       whose multiplicity reaches 0 disappear.
@@ -722,7 +680,7 @@ class MaterializedJoin:
             key_col="k", n_buckets=n_buckets,
         )
 
-    # -- signed side deltas ------------------------------------------------
+    # -- refresh -----------------------------------------------------------
 
     def _signed(
         self,
@@ -730,59 +688,26 @@ class MaterializedJoin:
         deletes: DataFrame | None,
         cols: list[str],
     ) -> tuple[DataFrame, list[int]] | None:
+        """One side's signed delta (NULL keys dropped) and its key-bucket
+        set. Both side states share key + bucket count, so the one
+        bucket list serves the side's own fold AND the other side's
+        pruned cross read."""
         k = self.key_col
-        parts = []
-        for df, sign in ((inserts, +1), (deletes, -1)):
-            if df is None:
-                continue
-            parts.append(
-                df.select(
-                    F.col(k).cast("string").alias(k), *cols
-                )
-                .filter(F.col(k).isNotNull())
-                .groupBy(k, *cols)
-                .agg((F.lit(sign) * F.count("*")).cast("bigint").alias("m"))
+
+        def partials(df: DataFrame, sign: int) -> DataFrame:
+            return _signed_counts(
+                df.select(F.col(k).cast("string").alias(k), *cols)
+                .filter(F.col(k).isNotNull()),
+                sign, "m",
             )
-        if not parts:
-            return None
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
-        delta = (
-            delta.groupBy(k, *cols)
-            .agg(F.sum("m").cast("bigint").alias("m"))
-            .filter(F.col("m") != 0)
+
+        delta = _signed_delta(
+            _signed_parts(inserts, deletes, partials),
+            [k, *cols], {"m": "bigint"}, finish=_nonzero,
         )
-        # bounded (distinct delta rows), read several times below —
-        # the MaterializedAgg checkpoint rationale
-        delta = delta.localCheckpoint(eager=True)
-        # the delta's key-bucket set, collected ONCE over the
-        # checkpointed rows (r10): both side states share key +
-        # bucket count, so this one list serves the delta's own
-        # fold_merge AND the other side's pruned read — previously
-        # each of those ran its own distinct+collect job
+        if delta is None:
+            return None
         return delta, self.a_state._touched_buckets(delta)
-
-    def _apply_side(
-        self,
-        state: BucketedParquetState,
-        delta: DataFrame,
-        cols: list[str],
-        touched: list[int] | None = None,
-    ) -> None:
-        """Fold a signed delta into a side multiset in ONE state pass:
-        ``fold_merge_sum`` unions the touched buckets with the delta
-        and groupBy-sums signed multiplicities over the full (key,
-        payload...) uniqueness tuple (bucket pruning still runs on the
-        join key alone); rows folding to m<=0 disappear by their
-        bucket being rewritten without them. (The earlier read_keys +
-        checkpoint + merge + gone-anti-join path cost five driver
-        actions per side per batch; the generic fold_merge full_outer
-        join needed a two-sided shuffle where this is one exchange.)"""
-        state.fold_merge_sum(delta, on=[self.key_col, *cols],
-                             touched=touched)
-
-    # -- refresh -----------------------------------------------------------
 
     def refresh(
         self,
@@ -807,13 +732,22 @@ class MaterializedJoin:
         cluster mostly idle): the two side-delta checkpoints run
         concurrently, then the ΔA fold, the ΔB fold and the
         view-delta/view-fold chain — three writes to three disjoint
-        state directories — run concurrently. ``read_keys`` pins
-        concrete generation paths at call time and retained
-        generations are never GC'd mid-refresh, so the *_old reads
-        stay pre-batch snapshots regardless of commit timing."""
+        state directories — run concurrently. ``read`` pins concrete
+        generation paths at call time and retained generations are
+        never GC'd mid-refresh, so the *_old reads stay pre-batch
+        snapshots regardless of commit timing."""
         from concurrent.futures import ThreadPoolExecutor
 
         k = self.key_col
+        payload = self.a_cols + self.b_cols
+
+        def cross(x: DataFrame, y: DataFrame) -> DataFrame:
+            # one delta-rule term: an A-shaped ⋈ a B-shaped multiset,
+            # multiplicities multiplied
+            return x.alias("x").join(y.alias("y"), k).select(
+                F.col(k), *payload, (F.col("x.m") * F.col("y.m")).alias("m")
+            )
+
         pool = ThreadPoolExecutor(max_workers=2)
         try:
             if (a_inserts is not None or a_deletes is not None) and (
@@ -836,62 +770,32 @@ class MaterializedJoin:
             # commits. Bucket-pruned read() only — read_keys' extra
             # per-key semi-join would be redundant here: each *_old
             # leg is immediately inner-joined on the key anyway.
-            dv_parts = []
+            dv_parts, folds = [], []
             if da_t is not None:
                 da, da_buckets = da_t
-                b_old = self.b_state.read(da_buckets)
-                dv_parts.append(
-                    da.alias("x")
-                    .join(b_old.alias("y"), k)
-                    .select(
-                        F.col(k), *self.a_cols, *self.b_cols,
-                        (F.col("x.m") * F.col("y.m")).alias("m"),
-                    )
-                )
+                dv_parts.append(cross(da, self.b_state.read(da_buckets)))
             if db_t is not None:
                 db, db_buckets = db_t
-                a_old = self.a_state.read(db_buckets)
-                dv_parts.append(
-                    a_old.alias("x")
-                    .join(db.alias("y"), k)
-                    .select(
-                        F.col(k), *self.a_cols, *self.b_cols,
-                        (F.col("x.m") * F.col("y.m")).alias("m"),
-                    )
-                )
+                dv_parts.append(cross(self.a_state.read(db_buckets), db))
             if da_t is not None and db_t is not None:
-                # the ΔA⋈ΔB cross term, straight off the two
-                # checkpointed deltas
-                dv_parts.append(
-                    da.alias("x")
-                    .join(db.alias("y"), k)
-                    .select(
-                        F.col(k), *self.a_cols, *self.b_cols,
-                        (F.col("x.m") * F.col("y.m")).alias("m"),
-                    )
-                )
-
-            folds = []
+                dv_parts.append(cross(da, db))  # the ΔA⋈ΔB cross term
+            # each side's signed delta folds over the full (key,
+            # payload...) uniqueness tuple; bucket pruning still runs
+            # on the join key alone
             if da_t is not None:
                 folds.append(pool.submit(
-                    self._apply_side, self.a_state, da, self.a_cols,
-                    da_buckets,
+                    self.a_state.fold_merge_sum, da,
+                    on=[k, *self.a_cols], touched=da_buckets,
                 ))
             if db_t is not None:
                 folds.append(pool.submit(
-                    self._apply_side, self.b_state, db, self.b_cols,
-                    db_buckets,
+                    self.b_state.fold_merge_sum, db,
+                    on=[k, *self.b_cols], touched=db_buckets,
                 ))
 
-            dv = dv_parts[0]
-            for p in dv_parts[1:]:
-                dv = dv.unionByName(p)
-            payload = self.a_cols + self.b_cols
-            dv = (
-                dv.groupBy(k, *payload)
-                .agg(F.sum("m").cast("bigint").alias("m"))
-                .filter(F.col("m") != 0)
-                .withColumn(
+            dv = _signed_delta(
+                dv_parts, [k, *payload], {"m": "bigint"},
+                finish=lambda d: _nonzero(d).withColumn(
                     "k",
                     F.concat_ws(
                         self._SEP,
@@ -907,8 +811,7 @@ class MaterializedJoin:
                             for c in payload
                         ],
                     ),
-                )
-                .localCheckpoint(eager=True)  # bounded view delta
+                ),
             )
 
             # overlaps with the side folds still in flight — the
@@ -916,9 +819,7 @@ class MaterializedJoin:
             # The view fold is the same signed-sum shape ('k' is a
             # function of (key, payload), so grouping by the full
             # column tuple groups exactly per view row).
-            self.view_state.fold_merge_sum(
-                dv, on=["k", self.key_col, *payload]
-            )
+            self.view_state.fold_merge_sum(dv, on=["k", k, *payload])
             for f in folds:
                 f.result()
         finally:

@@ -22,7 +22,8 @@ Operators:
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+import os
+from typing import Callable, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -182,26 +183,23 @@ def foreach_batch_upsert(target_state, key_col: str = "user_id"):
             Window.partitionBy(key_col)
             .orderBy(F.col("ordinal").desc(), F.col("event_id").desc())
         )
-        if hasattr(target_state, "read_keys"):
-            # BucketedParquetState: read ONLY the batch keys' buckets,
-            # resolve max-ordinal per key, rewrite only those buckets —
-            # O(batch) I/O per micro-batch instead of O(state)
-            cur = target_state.read_keys(batch_df.select(key_col))
-            merged = cur.unionByName(batch_df, allowMissingColumns=True)
-            latest = (
-                merged.withColumn("_rn", F.row_number().over(w))
-                .filter("_rn = 1")
-                .drop("_rn")
-            )
+        # BucketedParquetState: read ONLY the batch keys' buckets,
+        # resolve max-ordinal per key, rewrite only those buckets —
+        # O(batch) I/O per micro-batch instead of O(state)
+        bucketed = hasattr(target_state, "read_keys")
+        cur = (
+            target_state.read_keys(batch_df.select(key_col))
+            if bucketed else target_state.read()
+        )
+        latest = (
+            cur.unionByName(batch_df, allowMissingColumns=True)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter("_rn = 1")
+            .drop("_rn")
+        )
+        if bucketed:
             target_state.merge(latest)
         else:
-            cur = target_state.read()
-            merged = cur.unionByName(batch_df, allowMissingColumns=True)
-            latest = (
-                merged.withColumn("_rn", F.row_number().over(w))
-                .filter("_rn = 1")
-                .drop("_rn")
-            )
             target_state.overwrite(latest)
 
     return _sink
@@ -269,20 +267,13 @@ def dedup_stream(
     )
 
 
-def foreach_batch_ivm(view, applied_path: str | None = None):
-    """Streaming incremental view maintenance: fold each micro-batch
-    as an insert delta into a :class:`..plans.ivm.MaterializedAgg`.
-
-    Unlike the keyed upsert above, IVM deltas are NOT idempotent — a
-    re-delivered batch would double-count — so exactly-once comes
-    from a batchId fence persisted next to the view state (the
-    standard foreachBatch replay contract: Spark re-runs a failed
-    batch with the SAME batchId, which the fence turns into a no-op
-    after the first successful apply)."""
-    import os
-
-    path = applied_path or os.path.join(view.state.path, "_LAST_BATCH")
-
+def _fenced(path: str, apply: Callable[[DataFrame], None]):
+    """``foreachBatch`` sink that runs ``apply(batch_df)`` at most once
+    per batchId: the last applied batchId is persisted in ``path``
+    (replaced atomically after the apply), and a batchId at or below
+    it is skipped. Spark re-runs a failed batch with the SAME batchId
+    (the foreachBatch replay contract), so a non-idempotent apply
+    becomes exactly-once."""
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         try:
             with open(path) as f:
@@ -291,13 +282,27 @@ def foreach_batch_ivm(view, applied_path: str | None = None):
             last = -1
         if batch_id <= last:
             return
-        view.refresh(inserts=batch_df)
+        apply(batch_df)
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(batch_id))
         os.replace(tmp, path)
 
     return _sink
+
+
+def foreach_batch_ivm(view):
+    """Streaming incremental view maintenance: fold each micro-batch
+    as an insert delta into a :class:`..plans.ivm.MaterializedAgg`.
+
+    Unlike the keyed upsert above, IVM deltas are NOT idempotent — a
+    re-delivered batch would double-count — so exactly-once comes
+    from a batchId fence (:func:`_fenced`) persisted next to the view
+    state as ``_LAST_BATCH``."""
+    return _fenced(
+        os.path.join(view.state.path, "_LAST_BATCH"),
+        lambda batch_df: view.refresh(inserts=batch_df),
+    )
 
 
 def foreach_batch_expectations(
@@ -341,7 +346,7 @@ def foreach_batch_expectations(
     return _sink
 
 
-def foreach_batch_drift(monitor, applied_path: str | None = None):
+def foreach_batch_drift(monitor):
     """Streaming drift-reference maintenance: fold each micro-batch
     of embedding rows into an
     :class:`..operators.evaluation.IncrementalDriftMonitor`'s
@@ -353,35 +358,13 @@ def foreach_batch_drift(monitor, applied_path: str | None = None):
     Histogram deltas are not idempotent (a re-delivered batch would
     double-count its bucket increments), so the same batchId fence
     as :func:`foreach_batch_ivm` provides exactly-once."""
-    import os
-
-    path = applied_path or os.path.join(
-        monitor.view.state.path, "_LAST_BATCH"
+    return _fenced(
+        os.path.join(monitor.view.state.path, "_LAST_BATCH"),
+        lambda batch_df: monitor.refresh(inserts=batch_df),
     )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            with open(path) as f:
-                last = int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            last = -1
-        if batch_id <= last:
-            return
-        monitor.refresh(inserts=batch_df)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, path)
 
-    return _sink
-
-
-def foreach_batch_join_cdc(
-    view,
-    side: str,
-    op_col: str = "_op",
-    applied_path: str | None = None,
-):
+def foreach_batch_join_cdc(view, side: str, op_col: str = "_op"):
     """Streaming maintenance of a :class:`..plans.ivm.MaterializedJoin`
     from a CDC stream of ONE side: each micro-batch carries rows
     tagged ``op_col`` = ``'insert'`` or ``'delete'`` (a Debezium-style
@@ -392,37 +375,22 @@ def foreach_batch_join_cdc(
 
     Join deltas are NOT idempotent (a re-delivered batch would
     double-apply its signed counts), so exactly-once comes from the
-    same per-side batchId fence as :func:`foreach_batch_ivm`: Spark
-    replays a failed batch with the SAME batchId, which the fence
-    turns into a no-op after the first successful apply. Two CDC
-    streams (one per side) each use their OWN fence file."""
-    import os
-
+    same batchId fence as :func:`foreach_batch_ivm`. Two CDC streams
+    (one per side) each use their OWN fence file,
+    ``_LAST_BATCH_{side}``."""
     if side not in ("a", "b"):
         raise ValueError("foreach_batch_join_cdc: side must be 'a' or 'b'")
-    path = applied_path or os.path.join(
-        view.view_state.path, f"_LAST_BATCH_{side}"
-    )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            with open(path) as f:
-                last = int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            last = -1
-        if batch_id <= last:
-            return
+    def apply(batch_df: DataFrame) -> None:
         ops = F.col(op_col)
         view.refresh(**{
             f"{side}_inserts": batch_df.filter(ops == "insert").drop(op_col),
             f"{side}_deletes": batch_df.filter(ops == "delete").drop(op_col),
         })
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, path)
 
-    return _sink
+    return _fenced(
+        os.path.join(view.view_state.path, f"_LAST_BATCH_{side}"), apply
+    )
 
 
 # -- SSE change-event stream, true streaming form (app/api/sse.py:81-162) ------

@@ -140,3 +140,129 @@ def test_bucketed_state_model_based(spark, tmp_path_factory, ops):
                 model.pop(f"k{i}", None)
     got = {r["k"]: r["v"] for r in st_.read().collect()}
     assert got == model
+
+
+_ROW = st.tuples(
+    st.sampled_from(["g0", "g1", "g2"]), st.sampled_from([1, 2, 3, 17, 40])
+)
+
+
+@given(data=st.data())
+@settings(max_examples=6, deadline=None)  # each step refreshes six views
+@pytest.mark.slow  # model-based matrix: explicit-only, like the one above
+def test_ivm_views_model_based(spark, tmp_path_factory, data):
+    """Model check of both IVM refresh routes: random insert/delete
+    batches over a small key space (deletes drawn only from live rows)
+    into every maintained view; after every step each view must equal
+    a one-shot computation over the live multiset."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from cocoindex_data_ingestion_spark.operators.sketches import (
+        _qsk_bucket_expr,
+    )
+    from cocoindex_data_ingestion_spark.plans.ivm import (
+        MaterializedAgg, MaterializedDistinct, MaterializedJoin,
+        MaterializedQuantile, MaterializedTopK,
+    )
+
+    path = str(tmp_path_factory.mktemp("ivm_model"))
+    schema = "id long, g string, v long"
+    agg = MaterializedAgg(spark, f"{path}/agg", "g", sum_cols=("v",),
+                          n_buckets=4)
+    mm = MaterializedAgg(spark, f"{path}/mm", "g", sum_cols=("v",),
+                         minmax_cols=("v",), n_buckets=4)
+    dis = MaterializedDistinct(spark, f"{path}/dis", "g", "v", n_buckets=4)
+    qs = MaterializedQuantile(spark, f"{path}/qs", "g", "v", n_buckets=4)
+    topk = MaterializedTopK(spark, f"{path}/topk", "g", "id", "v", k=2,
+                            n_buckets=4)
+    join = MaterializedJoin(spark, f"{path}/join", "g", "a_v bigint",
+                            "b_v bigint", n_buckets=4)
+
+    # live multisets: R feeds every view (and the join's A side),
+    # S feeds the join's B side
+    live = {"r": {}, "s": {}}
+    next_id = 0
+
+    def frame(rows):
+        return spark.createDataFrame(list(rows), schema)
+
+    def side(df, col):
+        return df.select("g", F.col("v").alias(col))
+
+    for _step in range(data.draw(st.integers(1, 3), label="steps")):
+        batch = {}
+        for rel in ("r", "s"):
+            cur = live[rel]
+            gone = set(data.draw(
+                st.lists(st.sampled_from(sorted(cur)), unique=True,
+                         max_size=3) if cur else st.just([]),
+                label=f"{rel} deletes",
+            ))
+            if cur and data.draw(st.booleans(), label=f"{rel} empties a group"):
+                g = data.draw(st.sampled_from(sorted({r[1] for r in cur.values()})))
+                gone |= {i for i, r in cur.items() if r[1] == g}
+            new = data.draw(st.lists(_ROW, max_size=4), label=f"{rel} inserts")
+            dels = [cur.pop(i) for i in gone]
+            ins = []
+            for g, v in new:
+                cur[next_id] = (next_id, g, v)
+                ins.append(cur[next_id])
+                next_id += 1
+            batch[rel] = (frame(ins) if ins else None,
+                          frame(dels) if dels else None)
+        (ins_r, del_r), (ins_s, del_s) = batch["r"], batch["s"]
+        base = frame(live["r"].values())
+        agg.refresh(inserts=ins_r, deletes=del_r)
+        mm.refresh(inserts=ins_r, deletes=del_r, base=base)
+        dis.refresh(inserts=ins_r, deletes=del_r)
+        qs.refresh(inserts=ins_r, deletes=del_r)
+        topk.refresh(inserts=ins_r, deletes=del_r, base=base)
+        join.refresh(
+            a_inserts=None if ins_r is None else side(ins_r, "a_v"),
+            a_deletes=None if del_r is None else side(del_r, "a_v"),
+            b_inserts=None if ins_s is None else side(ins_s, "b_v"),
+            b_deletes=None if del_s is None else side(del_s, "b_v"),
+        )
+
+        rows = list(live["r"].values())
+        groups = {g for _i, g, _v in rows}
+        vals = {g: [v for _i, gg, v in rows if gg == g] for g in groups}
+        assert {(r.g, r.n, r.sum_v) for r in agg.read().collect()} == {
+            (g, len(vs), float(sum(vs))) for g, vs in vals.items()
+        }
+        assert {
+            (r.g, r.n, r.sum_v, r.min_v, r.max_v) for r in mm.read().collect()
+        } == {
+            (g, len(vs), float(sum(vs)), float(min(vs)), float(max(vs)))
+            for g, vs in vals.items()
+        }
+        assert {
+            (r.g, r.n_distinct) for r in dis.read_counts().collect()
+        } == {(g, len(set(vs))) for g, vs in vals.items()}
+        cells = (
+            base.select("g", F.expr(_qsk_bucket_expr("v")).alias("bucket"))
+            .groupBy("g", "bucket").count().collect()
+        )
+        assert {
+            (r.g, r.bucket, r.cnt) for r in qs.read_cells().collect()
+        } == {(r.g, r.bucket, r["count"]) for r in cells}
+        best = {
+            (g, i, float(v))
+            for g in groups
+            for i, _g, v in sorted(
+                (r for r in rows if r[1] == g), key=lambda r: (-r[2], r[0])
+            )[:2]
+        }
+        assert {(r.g, r.id, r.v) for r in topk.read().collect()} == best
+        a = Counter((g, v) for _i, g, v in rows)
+        b = Counter((g, v) for _i, g, v in live["s"].values())
+        assert {
+            (r.g, r.a_v, r.b_v, r.m) for r in join.read().collect()
+        } == {
+            (ga, av, bv, ma * mb)
+            for (ga, av), ma in a.items()
+            for (gb, bv), mb in b.items()
+            if ga == gb
+        }

@@ -84,7 +84,7 @@ def main() -> None:
         "  construction. On the production layout — metadata stored",
         "  as partition columns — the same IN-list lands in",
         "  `PartitionFilters` (directory pruning): verified by",
-        "  `tools/scaling_probe.py --r6`, which materializes docs",
+        "  `tools/scaling_probe.py --r6` (deleted; in git history), which materializes docs",
         "  partitioned by (department, security_level), applies",
         "  `docmeta.access_filter`, and asserts the executed plan",
         "  prunes (result recorded in SCALING.md §Round-6).",

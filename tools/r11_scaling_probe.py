@@ -104,7 +104,8 @@ def main() -> None:
         .select(
             (F.col("doc_id") + F.col("_copy") * (n_docs * 10)).alias("doc_id"),
             # salt the text so per-copy chunk content differs (same
-            # discipline as scaling_probe_r10: unsalted copies would
+            # discipline as the deleted scaling_probe_r10, in git
+            # history: unsalted copies would
             # probe a degenerate all-duplicates profile)
             F.concat(
                 F.col("text"), F.lit(" copy "), F.col("_copy").cast("string")

@@ -17,9 +17,30 @@ the view's partials can be subtracted:
   ``MaterializedJoin`` sides and view. :func:`_signed_delta` turns the
   batch into ONE signed delta: per-key partials of the inserts with
   sign +1 and of the deletes with sign −1 (the standard delta-multiset
-  encoding), unioned, re-summed per key and checkpointed.
-  ``fold_merge_sum`` then adds it into the touched buckets in one
-  pass; keys whose count folds to 0 disappear.
+  encoding), unioned and re-summed per key. It is evaluated once, by
+  one ``limit(N + 1).toArrow()`` collect that also brings each row's
+  bucket id (``BucketedParquetState.pin``; N is the class constant
+  ``BucketedParquetState._DRIVER_ROWS``). ``fold_merge_sum`` then adds
+  it into the touched buckets; keys whose count folds to 0 disappear.
+  The fold takes one of two routes:
+
+  - **driver**, when the delta has at most N rows and the touched
+    buckets hold at most N rows (read from their parquet footers):
+    pyarrow reads the bucket files, adds the delta per key and writes
+    one file per bucket into a new generation. The delta stays
+    pinned as a ``LocalRelation`` for the join's cross reads. A warm
+    count/sum refresh runs only the collect's 2 Spark jobs: a
+    distributed write has a fixed cost (an exchange, a repartition,
+    a write job and its commit) that a handful of rows never earns.
+  - **Spark**, above N: the delta is ``localCheckpoint``ed, the
+    buckets are read, unioned with it, summed and written by Spark.
+    A fold keyed on a nested column (a join's array payload) also
+    takes this route, as pyarrow cannot group by one.
+
+  Both routes commit through the same manifest CAS, and they give the
+  same state rows (tests/test_ivm_routes.py). The driver route needs
+  the state directory on a driver-visible POSIX path, which the
+  commit already needs (``os.listdir``, ``os.link``).
 - **Non-invertible views** — ``MaterializedAgg`` with min/max and
   ``MaterializedTopK``: removing an extremum or a top-k member needs
   the runner-up, which the state no longer holds.
@@ -28,26 +49,33 @@ the view's partials can be subtracted:
   partition pruning when the base is laid out by group), combines the
   inserts with the other touched groups' current rows (a
   bucket-pruned ``read_keys``), checkpoints the result and ``merge``s
-  it, deleting the groups that emptied. It reads state twice per
-  refresh (``read_keys`` and the merge rewrite).
+  it, deleting the groups that emptied. It collects the touched
+  buckets once and reads state twice per refresh (``read_keys`` and
+  the merge rewrite), always through Spark.
 
 Cost per refresh on either route: O(|delta| + touched buckets), never
 O(corpus). Both folds are associative + commutative, so the view
 after any sequence of refreshes equals a one-shot computation over the
-final relation — pinned in tests/test_incremental.py and
-tests/test_properties.py, and oracled end to end by the ``ivm_*``
-registry queries.
+final relation — pinned in tests/test_incremental.py,
+tests/test_ivm_routes.py and tests/test_properties.py, and oracled end
+to end by the ``ivm_*`` registry queries. A NULL group key is one
+group, as in SQL ``GROUP BY``.
 """
 
 from __future__ import annotations
 
 import functools
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cocoindex_data_ingestion_spark.plans.incremental import BucketedParquetState
+from cocoindex_data_ingestion_spark.plans.incremental import (
+    BucketedParquetState,
+    PinnedDelta,
+    join_keys,
+)
 
 
 def _union(dfs: list[DataFrame]) -> DataFrame:
@@ -87,20 +115,24 @@ def _signed_parts(
 
 
 def _signed_delta(
+    state: BucketedParquetState,
     parts: list[DataFrame],
     on: list[str],
     sums: dict[str, str],
     finish: Callable[[DataFrame], DataFrame] | None = None,
-) -> DataFrame | None:
+) -> PinnedDelta | None:
     """The invertible route's delta: signed partials ``parts`` unioned,
     re-summed per ``on`` key (:func:`_sum_by`), passed through the
-    view's own ``finish`` (filter, composite key) and checkpointed.
-    None when there are no parts.
+    view's own ``finish`` (filter, composite key) and pinned under
+    ``state``'s bucketing (:meth:`BucketedParquetState.pin`). None
+    when there are no parts.
 
-    The checkpoint is bounded by the batch's distinct keys, never its
-    row count. Without it every later action (the touched-bucket
-    collect, the generation write, a cross read) re-scans and
-    re-shuffles the whole micro-batch. Truncated lineage is safe: on a
+    The delta is bounded by the batch's distinct keys, never its row
+    count, and it is evaluated exactly once: a small one is collected
+    with its bucket ids and rebuilt as a ``LocalRelation``, a large one
+    is checkpointed. Without the pin every later action (the
+    generation write, a cross read) would re-scan and re-shuffle the
+    whole micro-batch. A checkpoint's truncated lineage is safe: on a
     failed or lost-executor replay the streaming fence
     (events.foreach_batch_ivm) re-runs the batch as a whole."""
     if not parts:
@@ -108,7 +140,7 @@ def _signed_delta(
     delta = _sum_by(_union(parts), on, sums)
     if finish is not None:
         delta = finish(delta)
-    return delta.localCheckpoint(eager=True)
+    return state.pin(delta)
 
 
 def _nonzero(delta: DataFrame) -> DataFrame:
@@ -129,13 +161,15 @@ def _recompute_merge(
     reduces state-shaped rows to the state of each group, and must
     satisfy ``combine(combine(A) ∪ B) == combine(A ∪ B)``.
 
-    1. Groups with deletes are recomputed from ``rows`` of their
+    1. The touched groups' bucket ids are collected once; the read
+       of step 3 and the merge of step 5 both use them.
+    2. Groups with deletes are recomputed from ``rows`` of their
        ``base`` rows (``base`` = the full relation AFTER this batch).
-    2. The inserts of the other groups are combined with those groups'
+    3. The inserts of the other groups are combined with those groups'
        current state rows.
-    3. The result (bounded by touched groups) is checkpointed, because
+    4. The result (bounded by touched groups) is checkpointed, because
        the merge evaluates it twice.
-    4. ``merge`` rewrites the touched groups, deleting those that
+    5. ``merge`` rewrites the touched groups, deleting those that
        emptied (deleted groups with no base row left)."""
     if deletes is not None and base is None:
         raise ValueError(
@@ -147,27 +181,30 @@ def _recompute_merge(
     def by_group(df: DataFrame) -> DataFrame:
         return df.withColumn(g, F.col(g).cast("string"))
 
-    parts, touched = [], []
-    del_groups = None
+    del_groups = ins = None
+    groups = []
     if deletes is not None:
         del_groups = by_group(deletes).select(g).distinct()
-        touched.append(del_groups)
-        parts.append(rows(by_group(base).join(del_groups, g, "left_semi")))
+        groups.append(del_groups)
     if inserts is not None:
         ins = by_group(inserts)
-        touched.append(ins.select(g).distinct())
+        groups.append(ins.select(g).distinct())
+    if not groups:
+        return
+    touched = _union(groups).distinct()
+    buckets = state._touched_buckets(touched)
+    parts = []
+    if del_groups is not None:
+        parts.append(rows(join_keys(by_group(base), del_groups, g, "left_semi")))
+    if ins is not None:
         if del_groups is not None:
             # the recompute already covers groups that also saw deletes
-            ins = ins.join(del_groups, g, "left_anti")
-        current = state.read_keys(ins.select(g).distinct())
+            ins = join_keys(ins, del_groups, g, "left_anti")
+        current = state.read_keys(ins.select(g).distinct(), touched=buckets)
         parts.append(current.unionByName(rows(ins)))
-    if not parts:
-        return
     out = combine(_union(parts)).localCheckpoint(eager=True)
-    gone = _union(touched).distinct().join(
-        out.select(g).distinct(), g, "left_anti"
-    )
-    state.merge(out, delete_keys=gone)
+    gone = join_keys(touched, out.select(g).distinct(), g, "left_anti")
+    state.merge(out, delete_keys=gone, touched=buckets)
 
 
 class MaterializedAgg:
@@ -254,7 +291,8 @@ class MaterializedAgg:
             )
             return
         delta = _signed_delta(
-            _signed_parts(inserts, deletes, self._partials), [g], self._sums
+            self.state, _signed_parts(inserts, deletes, self._partials),
+            [g], self._sums,
         )
         if delta is not None:
             self.state.fold_merge_sum(delta, on=[g], sum_cols=tuple(self._sums))
@@ -316,7 +354,7 @@ class MaterializedDistinct:
     ) -> None:
         g, v = self.group_col, self.value_col
         delta = _signed_delta(
-            _signed_parts(inserts, deletes, self._partials),
+            self.state, _signed_parts(inserts, deletes, self._partials),
             [g, v], {"m": "bigint"},
             finish=lambda d: d.withColumn(
                 "k", F.concat_ws(self._SEP, F.col(g), F.col(v))
@@ -432,18 +470,21 @@ class MaterializedEWMA:
     corrupting the curve.
     """
 
-    def __init__(self, spark, path: str):
-        import os
+    _SCHEMA = "g string, day long, n long, ewma double"
 
+    def __init__(self, spark, path: str):
         self.spark = spark
         self.path = path
         self._curve = os.path.join(path, "curve")
 
     def _read_curve(self):
-        try:
-            return self.spark.read.parquet(self._curve)
-        except Exception:
+        """The curve so far, or None before the first refresh. Whether
+        it exists is read from its directory, so a curve that exists
+        but cannot be read raises (at the first action) instead of
+        passing for "no curve yet"."""
+        if not os.path.isdir(self._curve):
             return None
+        return self.spark.read.schema(self._SCHEMA).parquet(self._curve)
 
     def read(self) -> "DataFrame":
         cur = self._read_curve()
@@ -491,9 +532,7 @@ class MaterializedEWMA:
             pdf["ewma"] = out
             return pdf[["g", "day", "n", "ewma"]]
 
-        new_rows = staged.groupBy("g").applyInPandas(
-            walk, schema="g string, day long, n long, ewma double"
-        )
+        new_rows = staged.groupBy("g").applyInPandas(walk, schema=self._SCHEMA)
         new_rows.write.mode("append").parquet(self._curve)
 
 
@@ -558,7 +597,7 @@ class MaterializedQuantile:
     ) -> None:
         g = self.group_col
         delta = _signed_delta(
-            _signed_parts(inserts, deletes, self._partials),
+            self.state, _signed_parts(inserts, deletes, self._partials),
             [g, "bucket"], {"cnt": "bigint"},
             finish=lambda d: d.withColumn(
                 "k", F.concat_ws(self._SEP, F.col(g), F.col("bucket"))
@@ -643,8 +682,6 @@ class MaterializedJoin:
         """``a_schema`` / ``b_schema``: DDL fragments for the payload
         columns of each side (the join key is held separately), e.g.
         ``"o_orderkey bigint, total_cents bigint"``."""
-        import os
-
         self.spark = spark
         self.key_col = key_col
         # parse payload column names via Spark's DDL parser (robust to
@@ -684,14 +721,15 @@ class MaterializedJoin:
 
     def _signed(
         self,
+        state: BucketedParquetState,
         inserts: DataFrame | None,
         deletes: DataFrame | None,
         cols: list[str],
-    ) -> tuple[DataFrame, list[int]] | None:
-        """One side's signed delta (NULL keys dropped) and its key-bucket
-        set. Both side states share key + bucket count, so the one
-        bucket list serves the side's own fold AND the other side's
-        pruned cross read."""
+    ) -> PinnedDelta | None:
+        """One side's signed delta (NULL keys dropped), pinned with its
+        key-bucket set. Both side states share key + bucket count, so
+        the one bucket list serves the side's own fold AND the other
+        side's pruned cross read."""
         k = self.key_col
 
         def partials(df: DataFrame, sign: int) -> DataFrame:
@@ -701,13 +739,10 @@ class MaterializedJoin:
                 sign, "m",
             )
 
-        delta = _signed_delta(
-            _signed_parts(inserts, deletes, partials),
+        return _signed_delta(
+            state, _signed_parts(inserts, deletes, partials),
             [k, *cols], {"m": "bigint"}, finish=_nonzero,
         )
-        if delta is None:
-            return None
-        return delta, self.a_state._touched_buckets(delta)
 
     def refresh(
         self,
@@ -724,12 +759,12 @@ class MaterializedJoin:
         (algebraically identical to the asymmetric
         ``ΔA⋈B_old ∪ A_new⋈ΔB`` — ``A_new = A_old + ΔA`` just
         distributes over the join — but every term now reads only the
-        PRE-batch snapshots plus the checkpointed deltas, so the view
+        PRE-batch snapshots plus the pinned deltas, so the view
         delta no longer waits for the ΔA side fold to commit).
 
         That unlocks full overlap of the round's driver actions
         (guide §2.6 — each of these jobs is small and leaves the
-        cluster mostly idle): the two side-delta checkpoints run
+        cluster mostly idle): the two side-delta pins run
         concurrently, then the ΔA fold, the ΔB fold and the
         view-delta/view-fold chain — three writes to three disjoint
         state directories — run concurrently. ``read`` pins concrete
@@ -754,16 +789,18 @@ class MaterializedJoin:
                 b_inserts is not None or b_deletes is not None
             ):
                 fa = pool.submit(
-                    self._signed, a_inserts, a_deletes, self.a_cols
+                    self._signed, self.a_state, a_inserts, a_deletes,
+                    self.a_cols,
                 )
                 fb = pool.submit(
-                    self._signed, b_inserts, b_deletes, self.b_cols
+                    self._signed, self.b_state, b_inserts, b_deletes,
+                    self.b_cols,
                 )
-                da_t, db_t = fa.result(), fb.result()
+                da, db = fa.result(), fb.result()
             else:
-                da_t = self._signed(a_inserts, a_deletes, self.a_cols)
-                db_t = self._signed(b_inserts, b_deletes, self.b_cols)
-            if da_t is None and db_t is None:
+                da = self._signed(self.a_state, a_inserts, a_deletes, self.a_cols)
+                db = self._signed(self.b_state, b_inserts, b_deletes, self.b_cols)
+            if da is None and db is None:
                 return
 
             # Pin all pre-batch snapshot reads BEFORE any fold
@@ -771,30 +808,26 @@ class MaterializedJoin:
             # per-key semi-join would be redundant here: each *_old
             # leg is immediately inner-joined on the key anyway.
             dv_parts, folds = [], []
-            if da_t is not None:
-                da, da_buckets = da_t
-                dv_parts.append(cross(da, self.b_state.read(da_buckets)))
-            if db_t is not None:
-                db, db_buckets = db_t
-                dv_parts.append(cross(self.a_state.read(db_buckets), db))
-            if da_t is not None and db_t is not None:
-                dv_parts.append(cross(da, db))  # the ΔA⋈ΔB cross term
+            if da is not None:
+                dv_parts.append(cross(da.df, self.b_state.read(da.buckets)))
+            if db is not None:
+                dv_parts.append(cross(self.a_state.read(db.buckets), db.df))
+            if da is not None and db is not None:
+                dv_parts.append(cross(da.df, db.df))  # the ΔA⋈ΔB cross term
             # each side's signed delta folds over the full (key,
             # payload...) uniqueness tuple; bucket pruning still runs
             # on the join key alone
-            if da_t is not None:
+            if da is not None:
                 folds.append(pool.submit(
-                    self.a_state.fold_merge_sum, da,
-                    on=[k, *self.a_cols], touched=da_buckets,
+                    self.a_state.fold_merge_sum, da, on=[k, *self.a_cols]
                 ))
-            if db_t is not None:
+            if db is not None:
                 folds.append(pool.submit(
-                    self.b_state.fold_merge_sum, db,
-                    on=[k, *self.b_cols], touched=db_buckets,
+                    self.b_state.fold_merge_sum, db, on=[k, *self.b_cols]
                 ))
 
             dv = _signed_delta(
-                dv_parts, [k, *payload], {"m": "bigint"},
+                self.view_state, dv_parts, [k, *payload], {"m": "bigint"},
                 finish=lambda d: _nonzero(d).withColumn(
                     "k",
                     F.concat_ws(

@@ -214,7 +214,7 @@ def test_runner_update_touches_one_tracking_bucket(spark, tmp_path):
 # -- optimistic-concurrency commit protocol (multi-writer) --------------------
 
 
-def _mk_state(spark, tmp_path, name="occ", n_buckets=8):
+def _mk_state(spark, tmp_path, name="occ", n_buckets=8, v0=0):
     from cocoindex_data_ingestion_spark.plans.incremental import (
         BucketedParquetState,
     )
@@ -224,9 +224,28 @@ def _mk_state(spark, tmp_path, name="occ", n_buckets=8):
         n_buckets=n_buckets,
     )
     st.overwrite(
-        spark.createDataFrame([(f"k{i}", i) for i in range(64)], "k string, v long")
+        spark.createDataFrame(
+            [(f"k{i}", v0 + i) for i in range(64)], "k string, v long"
+        )
     )
     return st
+
+
+def _driver_only(*states):
+    """Make ``fold_merge_sum`` on these handles fail if it leaves the
+    driver route (which writes no generation through Spark)."""
+    def no_spark_write(*_a, **_kw):
+        raise AssertionError("fold_merge_sum left the driver route")
+
+    for st in states:
+        st._spark_write = no_spark_write
+
+
+def _fold(spark, st, rows):
+    return st.fold_merge_sum(
+        st.pin(spark.createDataFrame(rows, "k string, v long")), on=["k"],
+        sum_cols=("v",),
+    )
 
 
 def _stale_first_manifest(st):
@@ -279,6 +298,20 @@ def test_occ_rebase_on_disjoint_buckets(spark, tmp_path):
     rows = {r["k"]: r["v"] for r in twin.read().collect()}
     assert rows["k1"] == 111 and rows["k2"] == 222 and len(rows) == 64
 
+    # the same race through fold_merge_sum's driver route: both
+    # writers' additions land
+    st = _mk_state(spark, tmp_path, name="occ_fold", v0=1)
+    twin = BucketedParquetState(
+        spark, st.path, st.schema_ddl, key_col="k", n_buckets=st.n_buckets
+    )
+    _driver_only(st, twin)
+    stale = _stale_first_manifest(st)
+    _fold(spark, twin, [("k2", 222)])
+    _fold(spark, st, [("k1", 111)])
+    assert st._manifest()["seq"] == stale["seq"] + 2
+    rows = {r["k"]: r["v"] for r in twin.read().collect()}
+    assert rows["k1"] == 2 + 111 and rows["k2"] == 3 + 222 and len(rows) == 64
+
 
 def test_occ_recompute_on_overlapping_buckets(spark, tmp_path):
     """Writer A loses the CAS to a writer that rewrote one of A's own
@@ -323,6 +356,21 @@ def test_occ_recompute_on_overlapping_buckets(spark, tmp_path):
     # B's gen_1 and A's recompute gen_2 plus the seed gen_0 remain
     assert len(on_disk) == 3
 
+    # the same overlap through fold_merge_sum's driver route: A's
+    # addition is recomputed on top of B's, not on the stale snapshot
+    st = _mk_state(spark, tmp_path, name="occ_fold", v0=1)
+    twin = BucketedParquetState(
+        spark, st.path, st.schema_ddl, key_col="k", n_buckets=st.n_buckets
+    )
+    _driver_only(st, twin)
+    stale = _stale_first_manifest(st)
+    _fold(spark, twin, [("k5", 555)])
+    _fold(spark, st, [("k5", 1)])
+    rows = {r["k"]: r["v"] for r in twin.read().collect()}
+    assert rows["k5"] == 6 + 555 + 1 and len(rows) == 64
+    assert twin._manifest()["seq"] == stale["seq"] + 2
+    assert len([d for d in os.listdir(st.path) if d.startswith("gen_")]) == 3
+
 
 def test_occ_concurrent_thread_writers(spark, tmp_path):
     """Four real concurrent writers (threads), each upserting its own
@@ -359,6 +407,31 @@ def test_occ_concurrent_thread_writers(spark, tmp_path):
     for i in range(4):
         assert rows[f"k{i}"] == 1000 + i
         assert rows[f"w{i}"] == i
+    assert len(rows) == 68
+
+    # the same four writers adding through fold_merge_sum's driver route
+    st = _mk_state(spark, tmp_path, name="occ_fold", n_buckets=4, v0=1)
+
+    def folder(i):
+        try:
+            w = BucketedParquetState(
+                spark, st.path, st.schema_ddl, key_col="k", n_buckets=4
+            )
+            _driver_only(w)
+            _fold(spark, w, [(f"k{i}", 1000), (f"w{i}", i + 1)])
+        except Exception as e:  # pragma: no cover
+            errs.append(e)
+
+    threads = [threading.Thread(target=folder, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errs
+    rows = {r["k"]: r["v"] for r in st.read().collect()}
+    for i in range(4):
+        assert rows[f"k{i}"] == 1 + i + 1000
+        assert rows[f"w{i}"] == i + 1
     assert len(rows) == 68
 
 

@@ -154,13 +154,18 @@ def test_ivm_views_model_based(spark, tmp_path_factory, data):
     """Model check of both IVM refresh routes: random insert/delete
     batches over a small key space (deletes drawn only from live rows)
     into every maintained view; after every step each view must equal
-    a one-shot computation over the live multiset."""
+    a one-shot computation over the live multiset. Each step draws
+    whether the invertible views fold on the driver or through Spark."""
     from collections import Counter
+    from unittest import mock
 
     from pyspark.sql import functions as F
 
     from cocoindex_data_ingestion_spark.operators.sketches import (
         _qsk_bucket_expr,
+    )
+    from cocoindex_data_ingestion_spark.plans.incremental import (
+        BucketedParquetState,
     )
     from cocoindex_data_ingestion_spark.plans.ivm import (
         MaterializedAgg, MaterializedDistinct, MaterializedJoin,
@@ -168,6 +173,7 @@ def test_ivm_views_model_based(spark, tmp_path_factory, data):
     )
 
     path = str(tmp_path_factory.mktemp("ivm_model"))
+    driver_rows = BucketedParquetState._DRIVER_ROWS
     schema = "id long, g string, v long"
     agg = MaterializedAgg(spark, f"{path}/agg", "g", sum_cols=("v",),
                           n_buckets=4)
@@ -214,17 +220,22 @@ def test_ivm_views_model_based(spark, tmp_path_factory, data):
                           frame(dels) if dels else None)
         (ins_r, del_r), (ins_s, del_s) = batch["r"], batch["s"]
         base = frame(live["r"].values())
-        agg.refresh(inserts=ins_r, deletes=del_r)
-        mm.refresh(inserts=ins_r, deletes=del_r, base=base)
-        dis.refresh(inserts=ins_r, deletes=del_r)
-        qs.refresh(inserts=ins_r, deletes=del_r)
-        topk.refresh(inserts=ins_r, deletes=del_r, base=base)
-        join.refresh(
-            a_inserts=None if ins_r is None else side(ins_r, "a_v"),
-            a_deletes=None if del_r is None else side(del_r, "a_v"),
-            b_inserts=None if ins_s is None else side(ins_s, "b_v"),
-            b_deletes=None if del_s is None else side(del_s, "b_v"),
-        )
+        # the invertible views' fold: driver route, or Spark route
+        driver = data.draw(st.booleans(), label="driver route")
+        with mock.patch.object(
+            BucketedParquetState, "_DRIVER_ROWS", driver_rows if driver else 0
+        ):
+            agg.refresh(inserts=ins_r, deletes=del_r)
+            mm.refresh(inserts=ins_r, deletes=del_r, base=base)
+            dis.refresh(inserts=ins_r, deletes=del_r)
+            qs.refresh(inserts=ins_r, deletes=del_r)
+            topk.refresh(inserts=ins_r, deletes=del_r, base=base)
+            join.refresh(
+                a_inserts=None if ins_r is None else side(ins_r, "a_v"),
+                a_deletes=None if del_r is None else side(del_r, "a_v"),
+                b_inserts=None if ins_s is None else side(ins_s, "b_v"),
+                b_deletes=None if del_s is None else side(del_s, "b_v"),
+            )
 
         rows = list(live["r"].values())
         groups = {g for _i, g, _v in rows}

@@ -2569,6 +2569,32 @@ class TestMaterializedEWMA:
                 spark.createDataFrame([("a", 10, 2)], "g string, day long, n long")
             )
 
+    def test_unreadable_curve_raises(self, spark, tmp_path):
+        """A curve that exists but cannot be read is not "no curve
+        yet": refresh raises instead of appending a fresh curve."""
+        import os
+
+        import pytest
+
+        from cocoindex_data_ingestion_spark.plans.ivm import MaterializedEWMA
+
+        view = MaterializedEWMA(spark, str(tmp_path / "ewma3"))
+        view.refresh(
+            spark.createDataFrame([("a", 10, 5)], "g string, day long, n long")
+        )
+        curve = os.path.join(view.path, "curve")
+        parts = [f for f in os.listdir(curve) if f.endswith(".parquet")]
+        for f in parts:
+            with open(os.path.join(curve, f), "wb") as out:
+                out.write(b"not a parquet file")
+        with pytest.raises(Exception):
+            view.refresh(
+                spark.createDataFrame([("a", 11, 3)], "g string, day long, n long")
+            )
+        assert sorted(
+            f for f in os.listdir(curve) if f.endswith(".parquet")
+        ) == sorted(parts)
+
 
 def test_mann_kendall_monotone_series(spark):
     import datetime as dt

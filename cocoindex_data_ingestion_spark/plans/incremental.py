@@ -22,10 +22,16 @@ Reference semantics reproduced (SURVEY §2.5):
 Spark-first shape: all of this is *set arithmetic over DataFrames* —
 the skip decision is one full-outer join between the source listing
 and the tracking table; the memo cache is a left join before the
-expensive UDF and a union-back after. State lives in parquet
-directories (at production scale: Delta/Iceberg tables so MERGE and
-txn log replace the read-modify-write used here; the join logic is
-identical).
+expensive UDF and a union-back after.
+
+All keyed state — the tracking table, update targets, the memo cache,
+the IVM views and the export sinks (``sinks.py``) — is one class,
+:class:`BucketedParquetState`: parquet files bucketed by a hash of a
+one- or multi-column key, a MERGE that rewrites only the buckets of the
+changed keys, and a manifest log with an optimistic-concurrency commit
+and time travel. At production scale a Delta/Iceberg ``MERGE INTO`` on
+a table bucketed by the same hash replaces it; the join logic is
+identical.
 
 Decision matrix (ported from the reference's row_indexer tests,
 src/execution/row_indexer.rs:823-987 — see tests/test_incremental.py):
@@ -44,10 +50,11 @@ src/execution/row_indexer.rs:823-987 — see tests/test_incremental.py):
 from __future__ import annotations
 
 import functools
+import operator
 import os
 import shutil
 import uuid
-from typing import Callable, NamedTuple
+from typing import Callable, NamedTuple, Sequence
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -65,58 +72,16 @@ def content_hash(*cols) -> F.Column:
     return F.sha2(F.to_json(F.struct(*[F.col(c) for c in cols])), 256)
 
 
-def join_keys(df: DataFrame, keys: DataFrame, col: str, how: str) -> DataFrame:
-    """``df`` semi- or anti-joined (``how``) with ``keys`` on ``col``,
-    NULL matching NULL: a NULL key is one key of the state, as a NULL
-    group is one group of a SQL ``GROUP BY``."""
-    return df.alias("_l").join(
-        keys.alias("_r"), F.col(f"_l.{col}").eqNullSafe(F.col(f"_r.{col}")), how
-    )
-
-
-class ParquetState:
-    """Tiny parquet-backed state table (small states: stats, fixtures).
-
-    Commits are versioned directories + an atomically-replaced pointer
-    file — a crash at any point leaves the previous version readable
-    (no rename window where the state dir doesn't exist). A Delta
-    MERGE replaces this verbatim on a real deployment. For keyed state
-    at scale use :class:`BucketedParquetState`, which rewrites only
-    the buckets containing changed keys."""
-
-    def __init__(self, spark: SparkSession, path: str, schema_ddl: str):
-        self.spark = spark
-        self.path = path
-        self.schema_ddl = schema_ddl
-
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "CURRENT")
-
-    def _current(self) -> str | None:
-        try:
-            with open(self._pointer()) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
-
-    def read(self) -> DataFrame:
-        cur = self._current()
-        if cur is not None:
-            return self.spark.read.parquet(os.path.join(self.path, cur))
-        return self.spark.createDataFrame([], self.schema_ddl)
-
-    def overwrite(self, df: DataFrame) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        prev = self._current()
-        seq = int(prev.split("_")[1]) + 1 if prev else 0
-        vdir = f"v_{seq}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, vdir))
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(vdir)
-        os.replace(tmp, self._pointer())  # single-rename commit
-        if prev:
-            shutil.rmtree(os.path.join(self.path, prev), ignore_errors=True)
+def join_keys(
+    df: DataFrame, keys: DataFrame, cols: Sequence[str], how: str
+) -> DataFrame:
+    """``df`` semi- or anti-joined (``how``) with ``keys`` on every
+    column of ``cols``, NULL matching NULL: a NULL key is one key of the
+    state, as a NULL group is one group of a SQL ``GROUP BY``."""
+    cond = functools.reduce(operator.and_, [
+        F.col(f"_l.{c}").eqNullSafe(F.col(f"_r.{c}")) for c in cols
+    ])
+    return df.alias("_l").join(keys.alias("_r"), cond, how)
 
 
 class PinnedDelta(NamedTuple):
@@ -136,7 +101,11 @@ class BucketedParquetState:
         path/MANIFEST.000000000007.json   {"seq": 7, "buckets": {"5": "gen_7_ab12cd34", ...}}
         path/gen_7_ab12cd34/_bucket=5/part-*.parquet
 
-    Rows are partitioned by ``crc32(key) % n_buckets``. A merge
+    The key is one column or a tuple of columns (``key_col``). Rows
+    are partitioned by ``crc32(key) % n_buckets``, where a tuple key is
+    hashed as its columns cast to string and joined by ``\x1f``; a key
+    is matched by null-safe equality on every column, so two keys that
+    share a bucket never replace each other. A merge
     rewrites ONLY the buckets containing changed keys into a fresh
     generation directory, then commits by claiming the next manifest
     sequence number with an atomic exclusive create (``os.link`` of a
@@ -187,13 +156,15 @@ class BucketedParquetState:
         spark: SparkSession,
         path: str,
         schema_ddl: str,
-        key_col: str,
+        key_col: str | Sequence[str],
         n_buckets: int = 32,
     ):
         self.spark = spark
         self.path = path
         self.schema_ddl = schema_ddl
-        self.key_col = key_col
+        self.key_cols = (
+            (key_col,) if isinstance(key_col, str) else tuple(key_col)
+        )
         self.n_buckets = n_buckets
 
     @functools.cached_property
@@ -258,10 +229,17 @@ class BucketedParquetState:
 
     # -- read -------------------------------------------------------------
 
-    def _bucket_of(self, col) -> F.Column:
-        """``crc32(key) % n_buckets``; a NULL key goes to bucket 0."""
+    def _bucket_of(self, *cols) -> F.Column:
+        """``crc32(key) % n_buckets`` of the key columns (or ``cols``):
+        the columns cast to string, joined by ``\x1f``. ``concat_ws``
+        skips NULLs and ``crc32('') = 0``, so a NULL single-column key
+        goes to bucket 0."""
+        cols = cols or [F.col(c) for c in self.key_cols]
         return F.pmod(
-            F.coalesce(F.crc32(col.cast("string").cast("binary")), F.lit(0)),
+            F.crc32(
+                F.concat_ws("\x1f", *[c.cast("string") for c in cols])
+                .cast("binary")
+            ),
             F.lit(self.n_buckets),
         )
 
@@ -269,9 +247,7 @@ class BucketedParquetState:
         """Sorted bucket ids of ``df``'s keys (one distinct+collect job)."""
         return sorted(
             r["b"]
-            for r in df.select(
-                self._bucket_of(F.col(self.key_col)).alias("b")
-            ).distinct().collect()
+            for r in df.select(self._bucket_of().alias("b")).distinct().collect()
         )
 
     def _manifest_at(self, seq: int) -> dict:
@@ -337,8 +313,8 @@ class BucketedParquetState:
                 return self.spark.createDataFrame([], self.schema_ddl)
             touched = self._touched_buckets(keys)
         return join_keys(
-            self.read(touched), keys.select(self.key_col).distinct(),
-            self.key_col, "left_semi",
+            self.read(touched), keys.select(*self.key_cols).distinct(),
+            self.key_cols, "left_semi",
         )
 
     # -- write ------------------------------------------------------------
@@ -359,10 +335,10 @@ class BucketedParquetState:
         snapshot, and the commit CAS detects whether any *touched*
         bucket moved since that snapshot — disjoint-bucket winners
         cause a cheap rebase, overlapping ones a full recompute."""
-        key = self.key_col
-        changed_keys = upserts.select(key)
+        key = self.key_cols
+        changed_keys = upserts.select(*key)
         if delete_keys is not None:
-            changed_keys = changed_keys.unionByName(delete_keys.select(key))
+            changed_keys = changed_keys.unionByName(delete_keys.select(*key))
         if touched is None:
             touched = self._touched_buckets(changed_keys)
         if not touched:
@@ -393,7 +369,7 @@ class BucketedParquetState:
         around the collect would save that second evaluation on this
         route but costs the small route 30-50 ms per refresh."""
         table = (
-            delta.withColumn("_bucket", self._bucket_of(F.col(self.key_col)))
+            delta.withColumn("_bucket", self._bucket_of())
             .limit(self._DRIVER_ROWS + 1)
             .toArrow()
         )
@@ -551,7 +527,7 @@ class BucketedParquetState:
         and writes one file, where ``spark.sql.shuffle.partitions``
         tasks would leave most of them empty on a small merge, while
         at scale the bucket count IS the natural write parallelism."""
-        out = out.withColumn("_bucket", self._bucket_of(F.col(self.key_col)))
+        out = out.withColumn("_bucket", self._bucket_of())
         out = (
             out.repartition(width, "_bucket") if width
             else out.repartition("_bucket")
@@ -673,8 +649,10 @@ class BucketedParquetState:
                     target = os.path.join(gdir, bd)
                     shutil.rmtree(target, ignore_errors=True)
                     removed.append(target)
-            if not os.listdir(gdir):
-                os.rmdir(gdir)
+            # what is left of a vacuumed Spark generation is its
+            # _SUCCESS marker (and the marker's .crc)
+            if not any(bd.startswith("_bucket=") for bd in os.listdir(gdir)):
+                shutil.rmtree(gdir, ignore_errors=True)
         return removed
 
 
@@ -754,8 +732,7 @@ class IncrementalRunner:
         listing: DataFrame,
         content_cols: list[str],
         transform: Callable[[DataFrame], DataFrame],
-        target: ParquetState,
-        target_key: str = "_key",
+        target: BucketedParquetState,
     ) -> dict[str, int]:
         """Process changed rows, bump unchanged, delete gone keys.
 
@@ -781,29 +758,13 @@ class IncrementalRunner:
                 to_process.drop("_key", "_src_hash")
             ).localCheckpoint(eager=True)
 
-            # 2. target MERGE: delete gone keys + upsert new results.
-            # Bucketed targets rewrite only the touched buckets; the
-            # plain ParquetState path is kept for tiny states.
-            if isinstance(target, BucketedParquetState):
-                target.merge(
-                    new_rows,
-                    delete_keys=deletes.select(
-                        F.col("_key").alias(target.key_col)
-                    ),
-                )
-            else:
-                cur = target.read()
-                changed_keys = planned.filter(
-                    "_action in ('process','delete')"
-                ).select(F.col("_key").alias("_changed_key"))
-                survivors = cur.join(
-                    changed_keys,
-                    cur[target_key] == F.col("_changed_key"),
-                    "left_anti",
-                )
-                target.overwrite(
-                    survivors.unionByName(new_rows, allowMissingColumns=True)
-                )
+            # 2. target MERGE: delete gone keys + upsert new results,
+            # rewriting only the touched buckets
+            (key,) = target.key_cols
+            target.merge(
+                new_rows,
+                delete_keys=deletes.select(F.col("_key").alias(key)),
+            )
 
             # 3. tracking MERGE (the reference's 2-phase commit collapses
             #    to one atomic state swap here)

@@ -123,7 +123,7 @@ def _signed_delta(
 ) -> PinnedDelta | None:
     """The invertible route's delta: signed partials ``parts`` unioned,
     re-summed per ``on`` key (:func:`_sum_by`), passed through the
-    view's own ``finish`` (filter, composite key) and pinned under
+    view's own ``finish`` (a filter) and pinned under
     ``state``'s bucketing (:meth:`BucketedParquetState.pin`). None
     when there are no parts.
 
@@ -176,7 +176,7 @@ def _recompute_merge(
             f"{what} maintenance needs `base` to recompute deleted"
             f" groups (the view is not invertible)"
         )
-    g = state.key_col
+    (g,) = state.key_cols
 
     def by_group(df: DataFrame) -> DataFrame:
         return df.withColumn(g, F.col(g).cast("string"))
@@ -195,15 +195,15 @@ def _recompute_merge(
     buckets = state._touched_buckets(touched)
     parts = []
     if del_groups is not None:
-        parts.append(rows(join_keys(by_group(base), del_groups, g, "left_semi")))
+        parts.append(rows(join_keys(by_group(base), del_groups, [g], "left_semi")))
     if ins is not None:
         if del_groups is not None:
             # the recompute already covers groups that also saw deletes
-            ins = join_keys(ins, del_groups, g, "left_anti")
+            ins = join_keys(ins, del_groups, [g], "left_anti")
         current = state.read_keys(ins.select(g).distinct(), touched=buckets)
         parts.append(current.unionByName(rows(ins)))
     out = combine(_union(parts)).localCheckpoint(eager=True)
-    gone = join_keys(touched, out.select(g).distinct(), g, "left_anti")
+    gone = join_keys(touched, out.select(g).distinct(), [g], "left_anti")
     state.merge(out, delete_keys=gone, touched=buckets)
 
 
@@ -320,8 +320,6 @@ class MaterializedDistinct:
     values are excluded to match SQL ``count(DISTINCT)``.
     """
 
-    _SEP = "\x1f"
-
     def __init__(
         self,
         spark: SparkSession,
@@ -332,9 +330,10 @@ class MaterializedDistinct:
     ):
         self.group_col = group_col
         self.value_col = value_col
-        schema = f"k string, {group_col} string, {value_col} string, m bigint"
+        schema = f"{group_col} string, {value_col} string, m bigint"
         self.state = BucketedParquetState(
-            spark, path, schema, key_col="k", n_buckets=n_buckets
+            spark, path, schema, key_col=(group_col, value_col),
+            n_buckets=n_buckets,
         )
 
     def _partials(self, delta: DataFrame, sign: int) -> DataFrame:
@@ -356,12 +355,9 @@ class MaterializedDistinct:
         delta = _signed_delta(
             self.state, _signed_parts(inserts, deletes, self._partials),
             [g, v], {"m": "bigint"},
-            finish=lambda d: d.withColumn(
-                "k", F.concat_ws(self._SEP, F.col(g), F.col(v))
-            ),
         )
         if delta is not None:
-            self.state.fold_merge_sum(delta, on=["k", g, v])
+            self.state.fold_merge_sum(delta, on=[g, v])
 
     def read_support(self) -> DataFrame:
         return self.state.read()
@@ -557,8 +553,6 @@ class MaterializedQuantile:
     upstream, e.g. ``CAST(floor(x*100 + 0.5) AS BIGINT)``).
     """
 
-    _SEP = "\x1f"
-
     def __init__(
         self,
         spark: SparkSession,
@@ -569,9 +563,10 @@ class MaterializedQuantile:
     ):
         self.group_col = group_col
         self.value_col = value_col
-        schema = f"k string, {group_col} string, bucket bigint, cnt bigint"
+        schema = f"{group_col} string, bucket bigint, cnt bigint"
         self.state = BucketedParquetState(
-            spark, path, schema, key_col="k", n_buckets=n_buckets
+            spark, path, schema, key_col=(group_col, "bucket"),
+            n_buckets=n_buckets,
         )
 
     def _partials(self, delta: DataFrame, sign: int) -> DataFrame:
@@ -599,13 +594,10 @@ class MaterializedQuantile:
         delta = _signed_delta(
             self.state, _signed_parts(inserts, deletes, self._partials),
             [g, "bucket"], {"cnt": "bigint"},
-            finish=lambda d: d.withColumn(
-                "k", F.concat_ws(self._SEP, F.col(g), F.col("bucket"))
-            ),
         )
         if delta is not None:
             self.state.fold_merge_sum(
-                delta, on=["k", g, "bucket"], sum_cols=("cnt",)
+                delta, on=[g, "bucket"], sum_cols=("cnt",)
             )
 
     def read_cells(self) -> DataFrame:
@@ -619,7 +611,7 @@ class MaterializedQuantile:
         )
 
         return qsketch_quantiles(
-            self.state.read().select(self.group_col, "bucket", "cnt"),
+            self.state.read(),
             [self.group_col],
             qs,
         )
@@ -656,9 +648,9 @@ class MaterializedJoin:
       KEY so the delta rule's cross reads (current B rows for ΔA's
       keys, current A rows for ΔB's keys) are bucket-pruned reads of
       the delta's key buckets — O(touched buckets), never O(side).
-    - ``view`` — one row per distinct joined row keyed by the full
-      row composite, fold-merged with the signed view delta; rows
-      whose multiplicity reaches 0 disappear.
+    - ``view`` — one row per distinct joined row, keyed on the tuple
+      ``(key, *payload)``, fold-merged with the signed view delta;
+      rows whose multiplicity reaches 0 disappear.
 
     Cost per refresh: O(|delta| + matching rows of the other side +
     touched buckets). Join keys are cast to string (the family
@@ -666,9 +658,6 @@ class MaterializedJoin:
     Payload columns must have disjoint names across the two sides
     (beyond the shared key) and simple (string-castable) types.
     """
-
-    _SEP = "\x1f"
-    _NULL = "\x00"  # composite-key sentinel for NULL payload values
 
     def __init__(
         self,
@@ -694,11 +683,10 @@ class MaterializedJoin:
                 f"MaterializedJoin: payload columns must be disjoint"
                 f" and not shadow the key ({sorted(dup)})"
             )
-        reserved = {"k", "m"} & ({key_col} | set(self.a_cols) | set(self.b_cols))
-        if reserved:
+        if "m" in {key_col, *self.a_cols, *self.b_cols}:
             raise ValueError(
-                f"MaterializedJoin: column names {sorted(reserved)} are"
-                f" reserved (composite key 'k', multiplicity 'm')"
+                "MaterializedJoin: column name 'm' is reserved"
+                " (multiplicity)"
             )
         self.a_state = BucketedParquetState(
             spark, os.path.join(path, "a"),
@@ -712,9 +700,9 @@ class MaterializedJoin:
         )
         self.view_state = BucketedParquetState(
             spark, os.path.join(path, "view"),
-            f"k string, {key_col} string, {a_schema}, {b_schema},"
-            f" m bigint",
-            key_col="k", n_buckets=n_buckets,
+            f"{key_col} string, {a_schema}, {b_schema}, m bigint",
+            key_col=(key_col, *self.a_cols, *self.b_cols),
+            n_buckets=n_buckets,
         )
 
     # -- refresh -----------------------------------------------------------
@@ -828,31 +816,14 @@ class MaterializedJoin:
 
             dv = _signed_delta(
                 self.view_state, dv_parts, [k, *payload], {"m": "bigint"},
-                finish=lambda d: _nonzero(d).withColumn(
-                    "k",
-                    F.concat_ws(
-                        self._SEP,
-                        F.col(k),
-                        # NULL-vs-missing disambiguation: concat_ws
-                        # SKIPS nulls, which would collide
-                        # (x, NULL, y) with (x, y, NULL) — coalesce
-                        # each payload to a reserved sentinel instead
-                        *[
-                            F.coalesce(
-                                F.col(c).cast("string"), F.lit(self._NULL)
-                            )
-                            for c in payload
-                        ],
-                    ),
-                ),
+                finish=_nonzero,
             )
 
             # overlaps with the side folds still in flight — the
             # view delta reads only pinned pre-batch generation paths.
-            # The view fold is the same signed-sum shape ('k' is a
-            # function of (key, payload), so grouping by the full
-            # column tuple groups exactly per view row).
-            self.view_state.fold_merge_sum(dv, on=["k", k, *payload])
+            # The view fold is the same signed-sum shape, keyed on the
+            # full (key, payload...) row.
+            self.view_state.fold_merge_sum(dv, on=[k, *payload])
             for f in folds:
                 f.result()
         finally:
@@ -862,6 +833,4 @@ class MaterializedJoin:
         """The maintained view: one row per distinct joined row with
         its bag multiplicity ``m`` (== the from-scratch join's
         ``GROUP BY *`` count over the final side states)."""
-        return self.view_state.read().select(
-            self.key_col, *self.a_cols, *self.b_cols, "m"
-        )
+        return self.view_state.read()

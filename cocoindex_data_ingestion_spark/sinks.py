@@ -7,13 +7,19 @@ property graphs (MERGE nodes/rels, delete stale, orphan GC,
 neo4j.rs:321-401, 874-897).
 
 Spark-first: every target is "a keyed table with MERGE semantics".
-The in-repo materialization is parquet state with an atomic swap
-(plans.incremental.ParquetState); on a real deployment the same
-DataFrames go to JDBC (batched upserts), a vector DB client in
-``foreachBatch``, or Delta ``MERGE INTO`` — the mutation *set
-arithmetic* below (upsert ∪ survivors, anti-join deletes, orphan GC)
-is the part the reference implements per-target in ~1k LoC each, and
-it is target-agnostic here.
+The in-repo materialization is the engine's one keyed state class,
+``plans.incremental.BucketedParquetState``: a merge (upsert by key)
+rewrites only the hash buckets of the merged keys and commits them
+through its manifest log, so a one-document publish writes that
+document's buckets, not the table. Table and vector targets are keyed
+on their ``key_cols``, graph nodes on ``node_id`` and graph edges on
+``(src, dst, rel_type)``. Deletes by filter, full syncs, the stale-rel
+delete and the orphan GC read the whole table and ``overwrite`` it. On
+a real deployment the same DataFrames go to JDBC (batched upserts), a
+vector DB client in ``foreachBatch``, or Delta ``MERGE INTO`` — the
+mutation *set arithmetic* below (upsert ∪ survivors, anti-join
+deletes, orphan GC) is the part the reference implements per-target in
+~1k LoC each, and it is target-agnostic here.
 """
 
 from __future__ import annotations
@@ -21,7 +27,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cocoindex_data_ingestion_spark.plans.incremental import ParquetState
+from cocoindex_data_ingestion_spark.plans.incremental import (
+    BucketedParquetState,
+)
+
+
+def _upsert(state: BucketedParquetState, rows: DataFrame) -> None:
+    """MERGE ``rows`` into ``state`` by key, evaluating them once:
+    ``pin`` collects them with their bucket ids, and the merge writes
+    from the pinned frame (a plain ``merge`` would evaluate an
+    expensive upstream twice, once for its bucket collect)."""
+    pinned = state.pin(rows)
+    state.merge(pinned.df, touched=pinned.buckets)
 
 
 class TableSink:
@@ -34,17 +51,15 @@ class TableSink:
 
     def __init__(self, spark: SparkSession, path: str, key_cols: list[str],
                  schema_ddl: str):
-        self.state = ParquetState(spark, path, schema_ddl)
-        self.key_cols = key_cols
+        self.state = BucketedParquetState(
+            spark, path, schema_ddl, key_col=key_cols
+        )
 
     def read(self) -> DataFrame:
         return self.state.read()
 
     def merge(self, rows: DataFrame) -> None:
-        cur = self.state.read()
-        keys = rows.select(*self.key_cols).distinct()
-        survivors = cur.join(keys, self.key_cols, "left_anti")
-        self.state.overwrite(survivors.unionByName(rows))
+        _upsert(self.state, rows)
 
     def delete_where(self, condition: str) -> int:
         cur = self.state.read()
@@ -94,8 +109,13 @@ class GraphSink:
 
     def __init__(self, spark: SparkSession, base_path: str,
                  node_schema_ddl: str, edge_schema_ddl: str):
-        self.nodes = ParquetState(spark, f"{base_path}/nodes", node_schema_ddl)
-        self.edges = ParquetState(spark, f"{base_path}/edges", edge_schema_ddl)
+        self.nodes = BucketedParquetState(
+            spark, f"{base_path}/nodes", node_schema_ddl, key_col="node_id"
+        )
+        self.edges = BucketedParquetState(
+            spark, f"{base_path}/edges", edge_schema_ddl,
+            key_col=("src", "dst", "rel_type"),
+        )
         # label → declaration (GraphDeclaration, property_graph.rs:47-52:
         # a node label + index options declared WITHOUT being directly
         # exported, so relationships may reference it and the target
@@ -136,8 +156,7 @@ class GraphSink:
         return stmts
 
     def ensure_declared_endpoints(
-        self, edges: DataFrame, endpoint_label: str,
-        key: str = "node_id", label_col: str = "label",
+        self, edges: DataFrame, endpoint_label: str, label_col: str = "label",
     ) -> None:
         """Auto-create placeholder nodes for edge endpoints of a
         DECLARED label (the reference auto-creates relationship
@@ -150,27 +169,20 @@ class GraphSink:
                 "export but never declared — declare_label() it first"
             )
         endpoints = (
-            edges.select(F.col("src").alias(key))
-            .unionByName(edges.select(F.col("dst").alias(key)))
+            edges.select(F.col("src").alias("node_id"))
+            .unionByName(edges.select(F.col("dst").alias("node_id")))
             .distinct()
             .withColumn(label_col, F.lit(endpoint_label))
         )
-        existing = self.nodes.read().select(key)
-        missing = endpoints.join(existing, key, "left_anti")
-        self.merge_nodes(missing, key=key, auto_created=True)
+        existing = self.nodes.read().select("node_id")
+        missing = endpoints.join(existing, "node_id", "left_anti")
+        self.merge_nodes(missing, auto_created=True)
 
-    def merge_nodes(self, nodes: DataFrame, key: str = "node_id",
-                    auto_created: bool = False) -> None:
-        cur = self.nodes.read()
-        tagged = nodes.withColumn("_auto", F.lit(auto_created))
-        survivors = cur.join(tagged.select(key), key, "left_anti")
-        self.nodes.overwrite(survivors.unionByName(tagged))
+    def merge_nodes(self, nodes: DataFrame, auto_created: bool = False) -> None:
+        _upsert(self.nodes, nodes.withColumn("_auto", F.lit(auto_created)))
 
     def merge_edges(self, edges: DataFrame) -> None:
-        cur = self.edges.read()
-        keys = edges.select("src", "dst", "rel_type").distinct()
-        survivors = cur.join(keys, ["src", "dst", "rel_type"], "left_anti")
-        self.edges.overwrite(survivors.unionByName(edges))
+        _upsert(self.edges, edges)
 
     def delete_edges_from_sources(self, srcs: DataFrame) -> None:
         """Stale-rel cleanup: drop all edges whose src is being
@@ -178,16 +190,16 @@ class GraphSink:
         cur = self.edges.read()
         self.edges.overwrite(cur.join(srcs, "src", "left_anti"))
 
-    def gc_orphans(self, key: str = "node_id") -> int:
+    def gc_orphans(self) -> int:
         """Remove auto-created nodes that no edge references."""
         nodes, edges = self.nodes.read(), self.edges.read()
         endpoints = (
-            edges.select(F.col("src").alias(key))
-            .unionByName(edges.select(F.col("dst").alias(key)))
+            edges.select(F.col("src").alias("node_id"))
+            .unionByName(edges.select(F.col("dst").alias("node_id")))
             .distinct()
         )
         keep = nodes.filter(~F.col("_auto")).unionByName(
-            nodes.filter(F.col("_auto")).join(endpoints, key, "left_semi")
+            nodes.filter(F.col("_auto")).join(endpoints, "node_id", "left_semi")
         )
         removed = nodes.count() - keep.count()
         self.nodes.overwrite(keep)

@@ -171,10 +171,14 @@ def ordinal_upsert_stream(events: DataFrame) -> DataFrame:
 def foreach_batch_upsert(target_state, key_col: str = "user_id"):
     """Exactly-once-style sink builder for ``writeStream.foreachBatch``.
 
-    Each batch MERGEs into the parquet state by key keeping the max
-    ordinal (idempotent: re-delivered batches can't regress state —
-    the reference's precommit/commit tolerance,
-    row_indexer.rs:140-505)."""
+    Each batch MERGEs into the bucketed state (a
+    ``BucketedParquetState`` keyed on ``key_col``) keeping the max
+    ordinal per key (idempotent: re-delivered batches can't regress
+    state — the reference's precommit/commit tolerance,
+    row_indexer.rs:140-505). It reads ONLY the batch keys' buckets and
+    rewrites only those: O(batch) I/O per micro-batch, not O(state).
+    The resolved rows carry exactly the batch's keys, so one bucket
+    collect serves both the read and the merge."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
@@ -183,24 +187,16 @@ def foreach_batch_upsert(target_state, key_col: str = "user_id"):
             Window.partitionBy(key_col)
             .orderBy(F.col("ordinal").desc(), F.col("event_id").desc())
         )
-        # BucketedParquetState: read ONLY the batch keys' buckets,
-        # resolve max-ordinal per key, rewrite only those buckets —
-        # O(batch) I/O per micro-batch instead of O(state)
-        bucketed = hasattr(target_state, "read_keys")
-        cur = (
-            target_state.read_keys(batch_df.select(key_col))
-            if bucketed else target_state.read()
-        )
+        keys = batch_df.select(key_col)
+        touched = target_state._touched_buckets(keys)
         latest = (
-            cur.unionByName(batch_df, allowMissingColumns=True)
+            target_state.read_keys(keys, touched=touched)
+            .unionByName(batch_df, allowMissingColumns=True)
             .withColumn("_rn", F.row_number().over(w))
             .filter("_rn = 1")
             .drop("_rn")
         )
-        if bucketed:
-            target_state.merge(latest)
-        else:
-            target_state.overwrite(latest)
+        target_state.merge(latest, touched=touched)
 
     return _sink
 

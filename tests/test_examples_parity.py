@@ -253,7 +253,6 @@ def test_docs_to_knowledge_graph_example_flow(spark, tmp_path, md_dir):
         doc_nodes.select(
             F.col("filename").alias("node_id"), F.lit("Document").alias("label")
         ),
-        key="node_id",
     )
     rel_edges = flow.collector("entity_relationship").select(
         F.col("subject").alias("src"), F.col("object").alias("dst"),
@@ -443,7 +442,6 @@ def test_product_recommendation_example_flow(spark, tmp_path):
         data.select(
             F.col("id").alias("node_id"), F.lit("Product").alias("label")
         ),
-        key="node_id",
     )
     for coll, rel in [("product_taxonomy", "PRODUCT_TAXONOMY"),
                       ("product_complementary_taxonomy",

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cocoindex_data_ingestion_spark.plans.incremental import (
-    IncrementalRunner, MemoCache, ParquetState,
+    BucketedParquetState, IncrementalRunner, MemoCache,
 )
 
 
@@ -34,8 +34,9 @@ def _identity_transform(df):
 
 
 def _target(spark, tmp_path):
-    return ParquetState(
-        spark, str(tmp_path / "target"), "_key string, result string"
+    return BucketedParquetState(
+        spark, str(tmp_path / "target"), "_key string, result string",
+        key_col="_key",
     )
 
 
@@ -693,3 +694,118 @@ def test_ivm_topk_matches_full_recompute(spark, tmp_path):
     )
     check()
     assert all(r.g != "g0" for r in view.read().collect())
+
+
+# -- keys: single-column bucket ids, composite keys ----------------------------
+
+
+def test_single_column_bucket_ids_are_pinned(spark, tmp_path):
+    """A single-column key keeps ``crc32(cast(key as string)) %
+    n_buckets`` with NULL in bucket 0, so states written before keys
+    could be tuples stay readable: the bucket a key is looked up in is
+    the bucket it was written to."""
+    import zlib
+
+    from cocoindex_data_ingestion_spark.plans.incremental import (
+        BucketedParquetState,
+    )
+
+    def ids(ddl, keys):
+        st = BucketedParquetState(
+            spark, str(tmp_path / "ids"), f"k {ddl}", key_col="k"
+        )
+        df = spark.createDataFrame([(k,) for k in keys], f"k {ddl}")
+        return [r.b for r in df.select(st._bucket_of().alias("b")).collect()]
+
+    strs = [None, "", "a", "é", "日本", "a\x1fb"]
+    assert ids("string", strs) == [0, 0, 3, 30, 12, 15]
+    assert ids("string", strs)[1:] == [
+        zlib.crc32(k.encode()) % 32 for k in strs[1:]
+    ]
+    longs = [0, 1, -1, 7, 2**40, -(2**63)] + list(range(1000, 6000))
+    assert ids("bigint", longs) == [
+        zlib.crc32(str(k).encode()) % 32 for k in longs
+    ]
+
+
+def test_composite_key_merge_replaces_exact_tuples(spark, tmp_path):
+    """A tuple key matches by null-safe equality on every column: keys
+    whose hash encodings collide (``('a\\x1fb', 'c')`` and
+    ``('a', 'b\\x1fc')``, ``('x', NULL)`` and ``(NULL, 'x')``) share a
+    bucket, and a merge or key read still replaces, deletes or returns
+    only the exact tuple."""
+    from cocoindex_data_ingestion_spark.plans.incremental import (
+        BucketedParquetState,
+    )
+
+    ddl = "a string, b string, v long"
+    st = BucketedParquetState(
+        spark, str(tmp_path / "ck"), ddl, key_col=("a", "b"), n_buckets=4
+    )
+    rows = [
+        ("a\x1fb", "c", 1), ("a", "b\x1fc", 2), ("x", None, 3),
+        ("x", "", 4), (None, "x", 5), ("x", "y", 6), (None, None, 7),
+    ]
+    st.overwrite(spark.createDataFrame(rows, ddl))
+
+    def bucket(a, b):
+        return st._touched_buckets(
+            spark.createDataFrame([(a, b)], "a string, b string")
+        )
+
+    assert bucket("a\x1fb", "c") == bucket("a", "b\x1fc")
+    assert bucket("x", None) == bucket(None, "x")
+
+    touched = st.merge(
+        spark.createDataFrame([("a\x1fb", "c", 10), ("x", None, 30)], ddl),
+        delete_keys=spark.createDataFrame([(None, "x")], "a string, b string"),
+    )
+    assert touched == sorted(set(bucket("a", "b\x1fc") + bucket("x", None)))
+    assert {(r.a, r.b): r.v for r in st.read().collect()} == {
+        ("a\x1fb", "c"): 10, ("a", "b\x1fc"): 2, ("x", None): 30,
+        ("x", ""): 4, ("x", "y"): 6, (None, None): 7,
+    }
+    got = st.read_keys(spark.createDataFrame(
+        [("a", "b\x1fc"), ("x", None)], "a string, b string"
+    ))
+    assert {(r.a, r.b, r.v) for r in got.collect()} == {
+        ("a", "b\x1fc", 2), ("x", None, 30)
+    }
+
+
+def test_gc_removes_vacuumed_generation_dirs(spark, tmp_path):
+    """A Spark-written generation keeps its ``_SUCCESS`` marker after
+    its bucket directories are vacuumed; the GC removes the directory
+    too, so after 16 merges a generation older than the retained
+    manifest window is left only while a retained manifest still
+    points at one of its buckets, and it holds just those buckets."""
+    import os
+
+    from cocoindex_data_ingestion_spark.plans.incremental import (
+        BucketedParquetState,
+    )
+
+    ddl = "k string, v long"
+    st = BucketedParquetState(
+        spark, str(tmp_path / "gc"), ddl, key_col="k", n_buckets=4
+    )
+    for i in range(16):
+        st.merge(spark.createDataFrame([(f"k{i % 6}", i)], ddl))
+    oldest = st._manifest_seqs()[0]
+    referenced = {
+        (gen, f"_bucket={b}")
+        for m in st.history() for b, gen in m["buckets"].items()
+    }
+    old_gens = [
+        d for d in os.listdir(st.path)
+        if d.startswith("gen_") and int(d.split("_")[1]) < oldest
+    ]
+    for d in old_gens:
+        left = {
+            (d, e) for e in os.listdir(os.path.join(st.path, d))
+            if e.startswith("_bucket=")
+        }
+        assert left and left <= referenced, (d, left)
+    assert {r.k: r.v for r in st.read().collect()} == {
+        f"k{j}": max(i for i in range(16) if i % 6 == j) for j in range(6)
+    }

@@ -255,3 +255,39 @@ def test_orc_round_trip(spark, tmp_path, sf_dir):
     # predicate reaches the ORC scan (pushdown, like parquet)
     plan = back.filter("doc_id = 7")._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "doc_id" in plan
+
+
+def test_vector_sink_one_document_merge_rewrites_its_buckets(spark, tmp_path):
+    """A one-document ``VectorSink.merge`` rewrites only the buckets of
+    that document's chunk keys: every other bucket keeps its manifest
+    entry, and the new generation holds just the touched buckets."""
+    import os
+
+    ddl = "chunk_id string, doc_id long, embedding array<float>"
+    sink = sinks.VectorSink(
+        spark, str(tmp_path / "chunks"), ["chunk_id"], ddl, {"embedding": 2}
+    )
+
+    def chunks(doc, scale):
+        return [(f"{doc}-{i}", doc, [float(scale), float(i)]) for i in range(3)]
+
+    sink.merge(spark.createDataFrame(
+        [c for d in range(40) for c in chunks(d, 0)], ddl
+    ))
+    before = sink.state._manifest()["buckets"]
+    one = spark.createDataFrame(chunks(7, 1), ddl)
+    own = sink.state._touched_buckets(one)
+
+    sink.merge(one)
+    after = sink.state._manifest()["buckets"]
+    assert len(before) == 32 and set(after) == set(before)
+    changed = sorted(int(b) for b in after if after[b] != before[b])
+    assert changed == own and len(own) <= 3
+    (gen,) = {after[str(b)] for b in own}
+    assert sorted(
+        int(d.split("=")[1]) for d in os.listdir(os.path.join(sink.state.path, gen))
+        if d.startswith("_bucket=")
+    ) == own
+    rows = {r.chunk_id: r.embedding for r in sink.read().collect()}
+    assert len(rows) == 120
+    assert rows["7-1"] == [1.0, 1.0] and rows["8-1"] == [0.0, 1.0]

@@ -8,7 +8,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from cocoindex_data_ingestion_spark.plans.incremental import ParquetState
+from cocoindex_data_ingestion_spark.plans.incremental import BucketedParquetState
 from cocoindex_data_ingestion_spark.streaming import events as se
 
 
@@ -114,9 +114,10 @@ def test_ordinal_upsert_stream_drops_stale(spark, tmp_path):
 
 
 def test_foreach_batch_upsert_idempotent(spark, tmp_path):
-    state = ParquetState(
+    state = BucketedParquetState(
         spark, str(tmp_path / "target"),
         "user_id long, event_id long, ordinal long, event_type string, value double",
+        key_col="user_id",
     )
     sink = se.foreach_batch_upsert(state)
     batch = spark.createDataFrame(
@@ -144,9 +145,10 @@ def test_stream_foreach_batch_sink_end_to_end(spark, events_dir, tmp_path, sf_di
 
     from cocoindex_data_ingestion_spark.sources.tables import load_table
 
-    state = ParquetState(
+    state = BucketedParquetState(
         spark, str(tmp_path / "sink_state"),
         "user_id long, event_id long, ordinal long, event_type string, value double",
+        key_col="user_id",
     )
     stream = se.read_events_stream(spark, events_dir, max_files_per_trigger=1)
     enriched = stream.withColumn("ordinal", F.unix_micros("ts")).select(
@@ -570,3 +572,33 @@ def test_sse_change_stream_matches_batch_twin(spark, tmp_path):
         ).collect()
     ]
     assert got == expected
+
+
+def test_foreach_batch_upsert_collects_touched_buckets_once(
+    spark, tmp_path, monkeypatch
+):
+    """On a non-empty state a batch's keys are hashed to buckets once:
+    the read of the current rows and the merge share that set."""
+    ddl = "user_id long, event_id long, ordinal long, event_type string, value double"
+    state = BucketedParquetState(
+        spark, str(tmp_path / "target"), ddl, key_col="user_id", n_buckets=8
+    )
+    sink = se.foreach_batch_upsert(state)
+    sink(spark.createDataFrame(
+        [(u, u, 100, "view", 1.0) for u in range(20)], ddl
+    ), 0)
+
+    calls = {"n": 0}
+    real = BucketedParquetState._touched_buckets
+
+    def counted(self, df):
+        calls["n"] += 1
+        return real(self, df)
+
+    monkeypatch.setattr(BucketedParquetState, "_touched_buckets", counted)
+    sink(spark.createDataFrame(
+        [(3, 30, 200, "click", 2.0), (4, 40, 50, "stale", 0.0)], ddl
+    ), 1)
+    assert calls["n"] == 1
+    rows = {r.user_id: (r.event_id, r.ordinal) for r in state.read().collect()}
+    assert len(rows) == 20 and rows[3] == (30, 200) and rows[4] == (4, 100)

@@ -7,16 +7,18 @@ rerank, top-k.
 
 Spark-first: each leg is an independent small top-k plan; the
 fan-out is two plans unioned into one query, and the fusion groupBy
-runs over ≤ (legs × k) rows. One query is not one job: under AQE the
-BM25 leg's aggregate exchange is its own query stage, so a traced
-indexed request runs about 2.2 jobs and 3.1 stages. Nothing here
-shuffles the corpus: the vector leg is a TakeOrderedAndProject scan,
-the BM25 leg touches only the query terms' postings.
+runs over ≤ (legs × k) rows. Nothing here shuffles the corpus: the
+vector leg is a TakeOrderedAndProject scan, the BM25 leg touches only
+the query terms' postings.
 
 With ``index_dir`` the whole request is one parameterized SQL
 statement (indexing.bm25_statement / knn_statement under
-fusion.rrf_fuse_legs_sql), built in a handful of gateway calls; the
-Column-operator form of the same plan made about 1,400.
+fusion.rrf_fuse_legs_sql, their parameters merged), built in a
+handful of gateway calls; the Column-operator form of the same plan
+made about 1,400. On an index whose postings layout is at most
+indexing._COALESCE_MAX_BYTES (64 MB) the BM25 leg aggregates without
+an exchange, so the request is one job of one stage; above that size
+the leg's aggregate exchange is its own query stage (2 jobs, 3 stages).
 """
 
 from __future__ import annotations
@@ -63,17 +65,17 @@ def hybrid_search(
         if query_vec_df is None:
             raise ValueError("index_dir fast path requires query_vec_df")
         spark = docs.sparkSession
-        bm25_sql, args = bm25_statement(
+        bm25_sql, bm25_args = bm25_statement(
             spark, index_dir, query_terms, k=leg_k, id_col=id_col
         )
-        vec_sql = knn_statement(
+        vec_sql, vec_args = knn_statement(
             spark, index_dir, query_vec_df, k=leg_k, id_col=vec_id_col,
             exact=True,
         )
         return spark.sql(rrf_fuse_legs_sql(
             [("vector", vec_id_col, vec_sql), ("bm25", id_col, bm25_sql)],
             limit=k,
-        ), args=args)
+        ), args={**vec_args, **bm25_args})
     vec_leg = knn(
         embeddings, query_vec, k=leg_k, vec_col=vec_col, id_col=vec_id_col
     ).select(

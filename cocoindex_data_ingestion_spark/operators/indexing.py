@@ -27,8 +27,20 @@ a hybrid request built from Columns made ~1,400 Py4J calls and spent
 half its latency building a plan that runs no Spark job. The
 statement text is the same expression tree in the same order (every
 double literal ``D``-suffixed, because Spark SQL reads ``0.5`` as
-DECIMAL), so plans and scores are unchanged; query terms are bound
-as named parameters, never spliced into the text.
+DECIMAL), so scores are unchanged. Query terms are bound as named
+parameters, never spliced into the text, and so is the query vector:
+one string parameter ``:qvec`` of ``repr``-formatted doubles, read as
+``CAST(split(:qvec, ',') AS ARRAY<DOUBLE>)``. Catalyst folds that to
+the same array literal the spliced ``D`` literals gave (``repr`` ->
+``Double.parseDouble`` round-trips every finite double) without
+parsing each component twice per k-NN text; an empty vector, NaN
+and infinities are refused with ``ValueError``.
+
+A request runs as one Spark job. The BM25 leg coalesces its pruned
+postings scan to one partition (``/*+ COALESCE(1) */``) when the whole
+postings layout is at most ``_COALESCE_MAX_BYTES`` (64 MB, below the
+measured ~80 MB crossover), so its ``GROUP BY`` needs no exchange; a
+larger layout keeps the exchange and its parallel scan.
 
 At cluster scale the same layout is a Delta/Iceberg table with
 bucketing on token / z-order on signature; partition pruning is what
@@ -39,6 +51,7 @@ from __future__ import annotations
 
 import hashlib
 import itertools
+import math
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -63,6 +76,18 @@ from cocoindex_data_ingestion_spark.operators.vector_search import lsh_signature
 
 
 POSTINGS_BUCKETS = 64  # token-hash partition count of the postings layout
+
+# Largest postings layout whose BM25 leg runs as one coalesced task
+# (bm25_statement). Measured on synthetic Zipf postings written by the
+# build's own path, local[4] on a 4-vCPU VM, median warm request, three
+# query terms, exchange -> coalesced: 1.9 MB 77 -> 59 ms (rare terms),
+# 66 MB 87 -> 79 (rare) and 256 -> 193 (common), 82 MB 78 -> 78 (rare),
+# 101 MB 80 -> 87 (rare), 394 MB 112 -> 173, 1 GB 210 -> 418 (rare).
+# Rare-term requests lose from ~80 MB on, because one task then reads
+# every pruned bucket file in turn; common-term requests still gain at
+# 1 GB (3,228 -> 3,076 ms), their shuffle costing more than the
+# parallel scan saves. 64 MB keeps every measured request shape ahead.
+_COALESCE_MAX_BYTES = 64 << 20
 
 
 def _token_bucket(token: Column, n_buckets: int = POSTINGS_BUCKETS) -> Column:
@@ -107,6 +132,15 @@ def _layout_view(spark: SparkSession, path: str) -> str:
     return memo(spark, ("layout", path, "view"), build)
 
 
+def _layout_bytes(spark: SparkSession, path: str) -> int:
+    """On-disk size of a layout: the file listing's byte sum the
+    optimizer's statistics carry (no job runs), once per layout."""
+    return memo(spark, ("layout", path, "bytes"), lambda: int(
+        read_layout(spark, path)._jdf.queryExecution().optimizedPlan()
+        .stats().sizeInBytes()
+    ))
+
+
 def _stats_scalars(spark: SparkSession, index_dir: str) -> tuple[int, float]:
     """Corpus stats (one row), read once per session and layout."""
     path = f"{index_dir}/stats"
@@ -148,6 +182,23 @@ def _qvec_df_of(spark: SparkSession, query_vec) -> DataFrame:
 
 def _qvec_sql(vals: list) -> str:
     return "array(" + ",".join(spark_double(x) for x in vals) + ")"
+
+
+# the query vector as it appears in a statement: the one bound string
+# parameter :qvec (see _qvec_param), folded to an array<double> literal
+_QVEC_PARAM_SQL = "CAST(split(:qvec, ',') AS ARRAY<DOUBLE>)"
+
+
+def _qvec_param(vals: list) -> str:
+    """Value of ``:qvec``: the doubles' ``repr``s joined by commas.
+    A string cast would read ``nan``/``inf`` silently (a ``D`` literal
+    failed to parse), and ``''`` would fail as a cast, so an empty
+    vector and non-finite components are refused here."""
+    if not vals:
+        raise ValueError("query vector is empty")
+    if not all(map(math.isfinite, vals)):
+        raise ValueError("query vector has a NaN or infinite component")
+    return ",".join(repr(float(x)) for x in vals)
 
 
 def _qvec_literal(vals: list) -> Column:
@@ -450,7 +501,14 @@ def bm25_statement(
     """SQL text and named parameters of :func:`indexed_bm25`. The
     bucket list is static partition pruning, the token IN-list (terms
     bound as ``:t0, :t1, ...``) pushes into parquet row-group stats;
-    an empty term list reads nothing (``IN ()`` is not SQL)."""
+    an empty term list reads nothing (``IN ()`` is not SQL).
+
+    When the whole postings layout is at most ``_COALESCE_MAX_BYTES``,
+    the scan is coalesced to one partition (``/*+ COALESCE(1) */``): its
+    ``SinglePartition`` output satisfies the ``GROUP BY``, so the leg
+    aggregates in its scan stage and a request is one job of one
+    stage. A larger layout keeps the hash exchange, and with it a
+    parallel scan of the pruned bucket files."""
     qterms = list(dict.fromkeys(t.lower() for t in query_terms))
     n_docs, avgdl = _stats_scalars(spark, index_dir)
     args = {f"t{i}": t for i, t in enumerate(qterms)}
@@ -472,10 +530,15 @@ def bm25_statement(
     # same order-independent fixed-point sum as bm25.bm25_search —
     # keeps the shared DuckDB oracle bit-identical
     score = stable_round_spark_sql(stable_sum_spark_sql("term_score", 6), round_to)
+    postings = f"{index_dir}/postings"
+    hint = (
+        "/*+ COALESCE(1) */ "
+        if _layout_bytes(spark, postings) <= _COALESCE_MAX_BYTES else ""
+    )
     text = (
         f"SELECT {i}, {score} AS score FROM ("
-        f"SELECT {i}, {term_score} AS term_score "
-        f"FROM {_layout_view(spark, f'{index_dir}/postings')} WHERE {where}) "
+        f"SELECT {hint}{i}, {term_score} AS term_score "
+        f"FROM {_layout_view(spark, postings)} WHERE {where}) "
         f"GROUP BY {i} ORDER BY score DESC, {i} ASC LIMIT {int(k)}"
     )
     return text, args
@@ -593,7 +656,7 @@ def indexed_knn(
     ``query_vec_df`` may also be a plain ``list[float]`` (a service
     holds the request vector in memory): that skips the resolve job
     entirely on the warm path."""
-    return spark.sql(knn_statement(
+    return spark.sql(*knn_statement(
         spark, index_dir, query_vec_df, k=k, lsh_bits=lsh_bits, id_col=id_col,
         exact=exact, round_to=round_to, multiprobe=multiprobe,
     ))
@@ -609,12 +672,20 @@ def knn_statement(
     exact: bool = False,
     round_to: int = 4,
     multiprobe: int = 0,
-) -> str:
-    """SQL text of :func:`indexed_knn`: the query vector is an
-    ``array<double>`` literal and the probe signatures (strings of
-    ``0``/``1`` derived from it) an IN list on the ``sig`` partition
-    column."""
+) -> tuple[str, dict[str, str]]:
+    """SQL text and named parameters of :func:`indexed_knn`. The query
+    vector is the one string parameter ``:qvec`` (:func:`_qvec_param`;
+    ``ValueError`` if it is empty or not finite), cast to
+    ``array<double>`` where the statement uses it; the probe
+    signatures (strings of ``0``/``1`` derived from it) are an IN list
+    on the ``sig`` partition column.
+
+    The query norm stays ``sqrt(dot(q, q))`` in SQL rather than a
+    driver-computed double: a per-request double literal lands in the
+    generated code, so every request would compile a new class, while
+    the folded array is a reference the generated code reads."""
     qvec_vals = _resolve_qvec(query_vec_df)
+    args = {"qvec": _qvec_param(qvec_vals)}
     if exact:
         source = _layout_view(spark, f"{index_dir}/vectors")
     else:
@@ -630,16 +701,17 @@ def knn_statement(
         source = (
             f"{_layout_view(spark, f'{index_dir}/vectors_lsh')} WHERE sig IN ({sigs})"
         )
-    q = _qvec_sql(qvec_vals)
+    q = _QVEC_PARAM_SQL
     cos = (
         f"CASE WHEN norm > 0 THEN {_dot_sql('embedding', q)} / "
         f"(norm * sqrt({_dot_sql(q, q)})) ELSE 0.0D END"
     )
     i = _ident(id_col)
-    return (
+    text = (
         f"SELECT {i}, score FROM (SELECT *, {stable_round_spark_sql(cos, round_to)} AS score "
         f"FROM {source} ORDER BY score DESC, {i} ASC LIMIT {int(k)})"
     )
+    return text, args
 
 
 def _rank_probe_cells(
@@ -654,8 +726,6 @@ def _rank_probe_cells(
     tie-break. Returns (query vector values, probe cell ids) — the
     probe list becomes a compile-time IN filter, i.e. static
     partition pruning."""
-    import math
-
     qvec_vals = _resolve_qvec(query_vec_df)
 
     def _dot(a: list[float], b: list[float]) -> float:

@@ -107,7 +107,8 @@ def get_spark(
         # existing checkpoints keep reading their recorded version.
         .config("spark.sql.streaming.join.stateFormatVersion", "3")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -115,6 +116,15 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` unless ``SPARK_GRAFT_DRIVER_MEM`` sets
+    it: 16g, or half the host's physical memory when that is less, so
+    the driver heap leaves room on a small host for what runs beside
+    it (a second session, the Python workers)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 10, (phys // 2) >> 20)}m"
 
 
 def streaming_conf(

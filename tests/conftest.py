@@ -1,4 +1,5 @@
 import os
+import random
 import sys
 
 import pytest
@@ -14,6 +15,28 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     s = get_spark("tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` -> (Spark jobs, distinct stages) that ``fn()``
+    runs on this thread, counted by job group."""
+    sc = spark.sparkContext
+
+    def count(fn) -> tuple[int, int]:
+        gid = f"jobs-{random.getrandbits(48):x}"
+        sc.setJobGroup(gid, gid)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup(gid)
+        return len(jobs), len({s for j in jobs for s in st.getJobInfo(j).stageIds})
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -30,20 +30,6 @@ _QS = [1, 7, 40, 300, 1234]
 _DAYS = [dt.date(2024, 1, 1), dt.date(1999, 12, 31), dt.date(2024, 2, 29)]
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs run by ``fn()`` on this thread (by job group)."""
-    sc = spark.sparkContext
-    gid = f"jobs-{random.getrandbits(48):x}"
-    sc.setJobGroup(gid, gid)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
-    return len(sc.statusTracker().getJobIdsForGroup(gid))
-
-
 def _rows(df: DataFrame) -> list[tuple]:
     return sorted(map(tuple, df.collect()), key=repr)
 
@@ -195,7 +181,7 @@ def test_fold_routes_give_equal_state(spark, tmp_path, monkeypatch):
     assert calls["_fold_on_driver"] and calls["_spark_write"]
 
 
-def test_warm_count_sum_refresh_runs_two_jobs(spark, tmp_path):
+def test_warm_count_sum_refresh_runs_two_jobs(spark, spark_jobs, tmp_path):
     """A warm count/sum refresh of a 300-row batch runs the delta's
     collect (one shuffle: 2 jobs) and nothing else in Spark: no
     checkpoint, no bucket collect, no schema inference, no write."""
@@ -211,13 +197,15 @@ def test_warm_count_sum_refresh_runs_two_jobs(spark, tmp_path):
 
     view.refresh(inserts=batch(0))
     for i in (1, 2):
-        assert _jobs(spark, lambda: view.refresh(inserts=batch(i))) <= 2
+        assert spark_jobs(lambda: view.refresh(inserts=batch(i)))[0] <= 2
     assert {(r.event_type, r.n) for r in view.read().collect()} == {
         (k, 225) for k in kinds
     }
 
 
-def test_topk_refresh_collects_touched_buckets_once(spark, tmp_path, monkeypatch):
+def test_topk_refresh_collects_touched_buckets_once(
+    spark, spark_jobs, tmp_path, monkeypatch
+):
     """The recompute route (top-k, min/max) hands the bucket set it
     collects for reading the current rows on to the merge: a warm
     20-row inserts-only refresh of a 4-group ``MaterializedTopK``
@@ -240,7 +228,7 @@ def test_topk_refresh_collects_touched_buckets_once(spark, tmp_path, monkeypatch
         return real(self, df)
 
     monkeypatch.setattr(BucketedParquetState, "_touched_buckets", counted)
-    assert _jobs(spark, lambda: view.refresh(inserts=batch(1))) <= 11
+    assert spark_jobs(lambda: view.refresh(inserts=batch(1)))[0] <= 11
     assert collects["n"] == 1
     want = {
         (r.g, r.id, r.v)

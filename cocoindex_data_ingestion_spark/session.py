@@ -36,6 +36,13 @@ def get_spark(
       semantics (and required for DuckDB-oracle equality).
     - Arrow on — every pandas UDF crosses JVM↔Python via Arrow
       batches instead of pickled rows.
+    - ``spark.python.daemon.module`` — ``pydaemon``: PySpark's worker
+      daemon, with a zipimport rule that stops every Python worker
+      task from re-reading ``pyspark.zip`` (a no-op on Python 3.13+).
+      Workers must be able to import this package, as they already
+      must for its UDFs.
+
+    ``extra_conf`` is applied last and overrides any of these.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -110,6 +117,7 @@ def get_spark(
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", f"{__package__}.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -602,3 +602,112 @@ def test_foreach_batch_upsert_collects_touched_buckets_once(
     assert calls["n"] == 1
     rows = {r.user_id: (r.event_id, r.ordinal) for r in state.read().collect()}
     assert len(rows) == 20 and rows[3] == (30, 200) and rows[4] == (4, 100)
+
+
+def _write_event_file(path, rows):
+    """One events parquet file in the stream's schema; ``rows`` are
+    (event_id, ts_us, user_id, event_type, value)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = list(zip(*rows))
+    pq.write_table(pa.table({
+        "event_id": pa.array(cols[0], pa.int64()),
+        "ts": pa.array(cols[1], pa.timestamp("us", tz="UTC")),
+        "user_id": pa.array(cols[2], pa.int64()),
+        "event_type": pa.array(cols[3], pa.string()),
+        "value": pa.array(cols[4], pa.float64()),
+        "props": ["{}"] * len(rows),
+    }), path)
+
+
+def test_upsert_and_ivm_streams_recover_from_checkpoint(spark, tmp_path):
+    """Kill and restart: both streams replay 2 of 4 event files and
+    stop; the IVM query loses its last commit-log entry, as a kill
+    between its sink and the commit would leave it. Both restart from
+    the same checkpoints over all 4 files. The upsert's emits across
+    the two runs keep the newest event per user and never re-emit at
+    or below the state run 1 left; the IVM view, whose re-delivered
+    batch the batch-id fence skips, equals the one-shot aggregate."""
+    import os
+    import random
+
+    from cocoindex_data_ingestion_spark.plans.ivm import MaterializedAgg
+
+    rng = random.Random(11)
+    # unique timestamps spread over the files at random, so later
+    # files carry events older than what earlier files left in state
+    ts = rng.sample(range(1_700_000_000_000_000, 1_700_003_600_000_000, 1_000_000), 160)
+    events = [
+        (i, ts[i], rng.randrange(10), rng.choice(["view", "click", "buy"]),
+         rng.randrange(40) / 4)
+        for i in range(160)
+    ]
+    files = [events[i * 40:(i + 1) * 40] for i in range(4)]
+    src = tmp_path / "src"
+    src.mkdir()
+
+    def add_files(idx):
+        for i in idx:
+            name = str(src / f"events-{i}.parquet")
+            _write_event_file(name, files[i])
+            os.utime(name, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    ivm_ckpt = tmp_path / "ckpt_ivm"
+    view = MaterializedAgg(spark, str(tmp_path / "view"), "event_type",
+                           sum_cols=("value",), n_buckets=4)
+    fenced = se.foreach_batch_ivm(view)
+    batch_ids = []
+
+    def ivm_sink(df, batch_id):
+        batch_ids.append(batch_id)
+        fenced(df, batch_id)
+
+    def run():
+        # the memory sink cannot recover from a checkpoint: collect the
+        # upsert's emits on the driver instead
+        emits = []
+        stream = lambda: se.read_events_stream(spark, str(src), max_files_per_trigger=1)  # noqa: E731
+        up = (se.ordinal_upsert_stream(stream()).writeStream
+              .foreachBatch(lambda df, _: emits.extend(df.collect()))
+              .option("checkpointLocation", str(tmp_path / "ckpt_upsert")).start())
+        ivm = (stream().writeStream.foreachBatch(ivm_sink)
+               .option("checkpointLocation", str(ivm_ckpt)).start())
+        for q in (up, ivm):
+            _run_to_completion(q)
+            assert q.exception() is None
+        return emits
+
+    add_files([0, 1])
+    emits1 = run()
+    assert batch_ids == [0, 1]
+    for name in ("1", ".1.crc"):  # the commit and its checksum
+        os.remove(ivm_ckpt / "commits" / name)
+    add_files([2, 3])
+    emits2 = run()
+    assert batch_ids[2:] == [1, 2, 3]  # batch 1 re-delivered under its id
+
+    state1 = {}
+    for r in emits1:
+        state1[r.user_id] = max(state1.get(r.user_id, -1), r.ordinal)
+    # the run-2 files hold events the restored state must drop
+    assert any(t < state1.get(u, -1) for f in files[2:] for _, t, u, _, _ in f)
+    assert all(r.ordinal > state1.get(r.user_id, -1) for r in emits2)
+    latest = {}
+    for r in emits1 + emits2:
+        if r.ordinal > latest.get(r.user_id, (-1,))[0]:
+            latest[r.user_id] = (r.ordinal, r.event_id)
+    oracle = {}
+    for e in events:
+        if e[1] > oracle.get(e[2], (-1,))[0]:
+            oracle[e[2]] = (e[1], e[0])
+    assert latest == oracle
+
+    got = {r["event_type"]: (r["n"], r["sum_value"]) for r in view.read().collect()}
+    want = {
+        r["event_type"]: (r["n"], r["s"])
+        for r in spark.read.schema(se.EVENTS_SCHEMA).parquet(str(src))
+        .groupBy("event_type").agg(F.count("*").alias("n"), F.sum("value").alias("s"))
+        .collect()
+    }
+    assert got == want

@@ -29,6 +29,7 @@ from cocoindex_data_ingestion_spark.functions.compare import (
     stable_sum,
     stable_sum_sql as _S,
 )
+from cocoindex_data_ingestion_spark.functions.localrel import local_df
 from cocoindex_data_ingestion_spark.functions.similarity import (
     cosine_sim as similarity_cosine,
     cosine_sim_sql,
@@ -70,31 +71,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, name, sf_dir)
 
 
-def _local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """Literal table as a true LocalRelation. createDataFrame from a
-    Python LIST parallelizes into a 32-task Python-RDD job that
-    re-runs on EVERY execution (measured 0.5-5 s per collect); going
-    through pandas+Arrow plants the rows in the plan as a
-    LocalRelation (~ms, constant-folded by Catalyst)."""
-    import pandas as pd
-
-    fields, depth, cur = [], 0, []
-    for ch in schema:
-        if ch == "<":
-            depth += 1
-        elif ch == ">":
-            depth -= 1
-        if ch == "," and depth == 0:
-            fields.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    fields.append("".join(cur))
-    names = [f.strip().split()[0] for f in fields]
-    pdf = pd.DataFrame(rows, columns=names, dtype=object)
-    return spark.createDataFrame(pdf, schema)
-
-
 def _qvec_df(emb: DataFrame) -> DataFrame:
     """The query vector: embedding of vec_id=0 (one-row broadcast)."""
     return emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
@@ -117,7 +93,7 @@ def _qvec_vals(spark: SparkSession, sf_dir: str) -> list:
 def _qvec_local_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The query vector as a one-row LocalRelation (for APIs that
     want a DataFrame; see _qvec_vals for the list form)."""
-    return _local_df(
+    return local_df(
         spark, [(_qvec_vals(spark, sf_dir),)], "qvec array<float>"
     )
 
@@ -2349,7 +2325,7 @@ def _punct_values_sql() -> str:
 
 
 def _punct_docs(spark: SparkSession) -> DataFrame:
-    return _local_df(spark, _PUNCT_CORPUS, "doc_id long, text string")
+    return local_df(spark, _PUNCT_CORPUS, "doc_id long, text string")
 
 
 def _sent_pack_ctes(src: str, chunk_size: int) -> str:
@@ -2526,7 +2502,7 @@ def _md_values_sql() -> str:
 
 
 def _md_docs(spark: SparkSession) -> DataFrame:
-    return _local_df(spark, _MD_CORPUS, "doc_id long, text string")
+    return local_df(spark, _MD_CORPUS, "doc_id long, text string")
 
 
 def _heading_aware_sql() -> str:
@@ -4038,7 +4014,7 @@ def _q_transient(spark: SparkSession, sf_dir: str) -> DataFrame:
         embed_documents, hash_embedder,
     )
 
-    qdf = _local_df(
+    qdf = local_df(
         spark, [(0, " ".join(QUERY_TERMS))], "doc_id long, text string"
     ).coalesce(1)
     out = embed_documents(qdf, hash_embedder(dim=64))
@@ -4076,7 +4052,7 @@ FROM (VALUES {values}) AS t(id, s)
 def _q_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cocoindex_data_ingestion_spark.functions.duration import parse_duration_us
 
-    df = _local_df(
+    df = local_df(
         spark, [(i, s) for i, s in enumerate(_DURATION_SAMPLES)],
         "id long, s string",
     ).coalesce(1)
@@ -5676,7 +5652,7 @@ def _q_chunk_recursive_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin derives atoms from the two-level boundary identity
     and replays the same DP CTE. The per-language consistency grid
     stays in tests/test_split_dp.py."""
-    docs = _local_df(
+    docs = local_df(
         spark,
         [(d, lang, t) for d, lang, _k1, _d1, _k2, _d2, _wd, t in _LANG_CORPUS],
         "doc_id long, lang string, text string",
@@ -6857,7 +6833,7 @@ def _q_llamaparse_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         infer_mime, normalized_markdown,
     )
 
-    df = _local_df(
+    df = local_df(
         spark,
         _LLAMAPARSE_CASES,
         "id int, filename string, markdown string, content string, "
@@ -7807,7 +7783,7 @@ def _q_rag_prompt_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("\n\nUser question:\n" + _USER_QUERY + "\n\nAnswer:"),
         ).alias("prompt")
     )
-    models = _local_df(
+    models = local_df(
         spark, [(m,) for m in _PROMPT_MODELS], "model string"
     )
     lm = F.lower(F.col("model"))
@@ -9204,7 +9180,7 @@ def _q_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     first = runner.update(listing, ["text"], transform, target)
     second = runner.update(listing, ["text"], transform, target)
     n_target = target.read().count()
-    return _local_df(
+    return local_df(
         spark,
         [
             (
@@ -9261,7 +9237,7 @@ def _q_entity_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
         normalize_entity_type,
     )
 
-    df = _local_df(
+    df = local_df(
         spark,
         [(i, rt, mt) for i, (rt, mt) in enumerate(_ENTITY_TYPE_CASES)],
         "id int, raw_type string, mention string",
@@ -9303,7 +9279,7 @@ def _q_rel_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
         canonicalize_relationship_type,
     )
 
-    df = _local_df(
+    df = local_df(
         spark, [(i, s) for i, s in enumerate(_REL_TYPE_CASES)],
         "id int, label string",
     )
@@ -9426,7 +9402,7 @@ def _q_rel_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         validate_entities_col,
     )
 
-    cases = _local_df(
+    cases = local_df(
         spark,
         _REL_MODEL_CASES,
         "id int, src_name string, src_meta string, label string, "
@@ -9916,7 +9892,7 @@ def _q_typed_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    cues = _local_df(spark, [(c,) for c in _REL_CUES], "cue string")
+    cues = local_df(spark, [(c,) for c in _REL_CUES], "cue string")
     hits = docs.crossJoin(F.broadcast(cues)).select(
         canonicalize_relationship_type("cue").alias("relationship_type"),
         "doc_id",

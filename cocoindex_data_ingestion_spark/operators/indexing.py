@@ -1054,10 +1054,9 @@ class IncrementalVectorIndex:
         new_rows = (
             current.unionByName(ins) if ins is not None else current
         )
-        gone = cells.join(
-            new_rows.select("cent_id").distinct(), "cent_id", "left_anti"
-        )
-        self.state.merge(new_rows, delete_keys=gone)
+        # every touched cell is a delete key: a cell with new rows is
+        # replaced by them, and only a cell left empty goes
+        self.state.merge(new_rows, delete_keys=cells)
 
     def query(
         self,

@@ -48,10 +48,11 @@ the view's partials can be subtracted:
   the ``base`` rows of those groups alone (a pushed-down predicate;
   partition pruning when the base is laid out by group), combines the
   inserts with the other touched groups' current rows (a
-  bucket-pruned ``read_keys``), checkpoints the result and ``merge``s
-  it, deleting the groups that emptied. It collects the touched
-  buckets once and reads state twice per refresh (``read_keys`` and
-  the merge rewrite), always through Spark.
+  bucket-pruned ``read_keys``, which collects their buckets) and
+  ``merge``s the result with every touched group as a delete key, so
+  the groups that emptied go. The merge pins the result in one
+  collect that brings its bucket ids, the same ``pin`` the invertible
+  route takes, and writes it through Spark.
 
 Cost per refresh on either route: O(|delta| + touched buckets), never
 O(corpus). Both folds are associative + commutative, so the view
@@ -161,16 +162,15 @@ def _recompute_merge(
     reduces state-shaped rows to the state of each group, and must
     satisfy ``combine(combine(A) ∪ B) == combine(A ∪ B)``.
 
-    1. The touched groups' bucket ids are collected once; the read
-       of step 3 and the merge of step 5 both use them.
-    2. Groups with deletes are recomputed from ``rows`` of their
+    1. Groups with deletes are recomputed from ``rows`` of their
        ``base`` rows (``base`` = the full relation AFTER this batch).
-    3. The inserts of the other groups are combined with those groups'
-       current state rows.
-    4. The result (bounded by touched groups) is checkpointed, because
-       the merge evaluates it twice.
-    5. ``merge`` rewrites the touched groups, deleting those that
-       emptied (deleted groups with no base row left)."""
+    2. The inserts of the other groups are combined with those groups'
+       current state rows (a bucket-pruned ``read_keys``).
+    3. ``merge`` writes the result (bounded by touched groups) and
+       takes every touched group as a delete key: a group in the
+       result is replaced by its rows, and a group that emptied
+       (deleted, with no base row left) is deleted. The merge pins
+       the result, which evaluates it once."""
     if deletes is not None and base is None:
         raise ValueError(
             f"{what} maintenance needs `base` to recompute deleted"
@@ -191,8 +191,6 @@ def _recompute_merge(
         groups.append(ins.select(g).distinct())
     if not groups:
         return
-    touched = _union(groups).distinct()
-    buckets = state._touched_buckets(touched)
     parts = []
     if del_groups is not None:
         parts.append(rows(join_keys(by_group(base), del_groups, [g], "left_semi")))
@@ -200,11 +198,9 @@ def _recompute_merge(
         if del_groups is not None:
             # the recompute already covers groups that also saw deletes
             ins = join_keys(ins, del_groups, [g], "left_anti")
-        current = state.read_keys(ins.select(g).distinct(), touched=buckets)
+        current = state.read_keys(ins.select(g).distinct())
         parts.append(current.unionByName(rows(ins)))
-    out = combine(_union(parts)).localCheckpoint(eager=True)
-    gone = join_keys(touched, out.select(g).distinct(), [g], "left_anti")
-    state.merge(out, delete_keys=gone, touched=buckets)
+    state.merge(combine(_union(parts)), delete_keys=_union(groups))
 
 
 class MaterializedAgg:

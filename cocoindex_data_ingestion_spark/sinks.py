@@ -32,15 +32,6 @@ from cocoindex_data_ingestion_spark.plans.incremental import (
 )
 
 
-def _upsert(state: BucketedParquetState, rows: DataFrame) -> None:
-    """MERGE ``rows`` into ``state`` by key, evaluating them once:
-    ``pin`` collects them with their bucket ids, and the merge writes
-    from the pinned frame (a plain ``merge`` would evaluate an
-    expensive upstream twice, once for its bucket collect)."""
-    pinned = state.pin(rows)
-    state.merge(pinned.df, touched=pinned.buckets)
-
-
 class TableSink:
     """Keyed table target with upsert + delete (Postgres-table shape).
 
@@ -59,7 +50,7 @@ class TableSink:
         return self.state.read()
 
     def merge(self, rows: DataFrame) -> None:
-        _upsert(self.state, rows)
+        self.state.merge(rows)
 
     def delete_where(self, condition: str) -> int:
         cur = self.state.read()
@@ -79,7 +70,9 @@ class VectorSink(TableSink):
     """Vector-collection target (Qdrant shape): a TableSink whose
     payload includes one or more named vector columns; top-k search
     over it is operators.vector_search.knn. Collection metadata
-    (dim, distance) is validated on merge."""
+    (dim, distance) is validated on merge, on the rows ``pin`` has
+    already evaluated, so an expensive upstream (chunking, embedding)
+    runs once: the merge then pins a ``LocalRelation``."""
 
     def __init__(self, spark: SparkSession, path: str, key_cols: list[str],
                  schema_ddl: str, vector_cols: dict[str, int]):
@@ -87,6 +80,7 @@ class VectorSink(TableSink):
         self.vector_cols = vector_cols
 
     def merge(self, rows: DataFrame) -> None:
+        rows = self.state.pin(rows).df
         for col, dim in self.vector_cols.items():
             bad = rows.filter(
                 F.col(col).isNotNull() & (F.size(F.col(col)) != dim)
@@ -179,10 +173,10 @@ class GraphSink:
         self.merge_nodes(missing, auto_created=True)
 
     def merge_nodes(self, nodes: DataFrame, auto_created: bool = False) -> None:
-        _upsert(self.nodes, nodes.withColumn("_auto", F.lit(auto_created)))
+        self.nodes.merge(nodes.withColumn("_auto", F.lit(auto_created)))
 
     def merge_edges(self, edges: DataFrame) -> None:
-        _upsert(self.edges, edges)
+        self.edges.merge(edges)
 
     def delete_edges_from_sources(self, srcs: DataFrame) -> None:
         """Stale-rel cleanup: drop all edges whose src is being

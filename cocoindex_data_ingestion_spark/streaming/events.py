@@ -177,8 +177,8 @@ def foreach_batch_upsert(target_state, key_col: str = "user_id"):
     state — the reference's precommit/commit tolerance,
     row_indexer.rs:140-505). It reads ONLY the batch keys' buckets and
     rewrites only those: O(batch) I/O per micro-batch, not O(state).
-    The resolved rows carry exactly the batch's keys, so one bucket
-    collect serves both the read and the merge."""
+    The read collects the keys' buckets; the merge pins the resolved
+    rows, whose collect brings their buckets along."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
@@ -187,16 +187,14 @@ def foreach_batch_upsert(target_state, key_col: str = "user_id"):
             Window.partitionBy(key_col)
             .orderBy(F.col("ordinal").desc(), F.col("event_id").desc())
         )
-        keys = batch_df.select(key_col)
-        touched = target_state._touched_buckets(keys)
         latest = (
-            target_state.read_keys(keys, touched=touched)
+            target_state.read_keys(batch_df.select(key_col))
             .unionByName(batch_df, allowMissingColumns=True)
             .withColumn("_rn", F.row_number().over(w))
             .filter("_rn = 1")
             .drop("_rn")
         )
-        target_state.merge(latest, touched=touched)
+        target_state.merge(latest)
 
     return _sink
 

@@ -809,3 +809,102 @@ def test_gc_removes_vacuumed_generation_dirs(spark, tmp_path):
     assert {r.k: r.v for r in st.read().collect()} == {
         f"k{j}": max(i for i in range(16) if i % 6 == j) for j in range(6)
     }
+
+
+def test_merge_evaluates_its_change_set_once(spark, spark_jobs, tmp_path):
+    """A bare ``merge(df, delete_keys=keys)`` evaluates ``df`` and
+    ``keys`` once: its pin collects them with their bucket ids, and the
+    write reads the pinned rows. A UDF on the key column counts the
+    rows it sees. A warm merge of 10 upserts and 2 delete keys runs 5
+    Spark jobs: the pin's collect and the write."""
+    ddl = "k string, v long"
+    st = BucketedParquetState(
+        spark, str(tmp_path / "once"), ddl, key_col="k", n_buckets=8
+    )
+    st.overwrite(spark.createDataFrame([(f"k{i}", i) for i in range(64)], ddl))
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(k):
+        seen.add(1)
+        return k
+
+    key = F.udf(counted, "string")
+    df = spark.createDataFrame(
+        [(f"k{i}", 100 + i) for i in range(10)], ddl
+    ).withColumn("k", key("k"))
+    keys = spark.createDataFrame(
+        [(f"k{i}",) for i in range(20, 25)], "k string"
+    ).withColumn("k", key("k"))
+
+    touched = st.merge(df, delete_keys=keys)
+    assert seen.value == 15
+    assert touched == st._touched_buckets(df.unionByName(keys, allowMissingColumns=True))
+    rows = {r.k: r.v for r in st.read().collect()}
+    assert len(rows) == 59 and rows["k3"] == 103 and "k22" not in rows
+
+    def warm():
+        st.merge(
+            spark.createDataFrame([(f"k{i}", 200 + i) for i in range(10)], ddl),
+            delete_keys=spark.createDataFrame([("k40",), ("k41",)], "k string"),
+        )
+
+    assert spark_jobs(warm)[0] <= 5
+
+
+# (upserts, delete keys) per merge on a tuple-keyed state: NULL key
+# columns, a duplicate upsert key, a delete-only merge, an upsert and a
+# delete of one key in one merge, and a delete of an absent key
+_MERGES = [
+    ([("a", 1, 1), ("a", 2, 2), (None, 1, 3), ("b", None, 4), (None, None, 5)],
+     []),
+    ([("a", 1, 10), ("a", 1, 11), ("c", 3, 6)], [(None, None)]),
+    ([], [("a", 2), ("b", None), ("zz", 9)]),
+    ([(None, 1, 30), ("d", 4, 7)], [(None, 1), ("c", 3)]),
+    ([("e", 5, 8)], [("d", 4)]),
+]
+
+
+def _merge_model(merges):
+    state: list[tuple] = []
+    for ups, dels in merges:
+        changed = {(a, b) for a, b, _ in ups} | set(dels)
+        state = [r for r in state if r[:2] not in changed] + list(ups)
+    return sorted(state, key=repr)
+
+
+def test_merge_routes_give_the_same_state(spark, tmp_path, monkeypatch):
+    """The same merges give the same state whether ``pin`` keeps the
+    change set as a LocalRelation (the default ``_DRIVER_ROWS``) or
+    checkpoints it (``_DRIVER_ROWS`` below every change set's size),
+    and both equal a Python model of the merge: every upsert row lands,
+    an upsert beats a delete of its key, NULL matches NULL."""
+    ddl = "a string, b long, v long"
+    routes = []
+    real_pin = BucketedParquetState.pin
+
+    def pin(self, delta):
+        pinned = real_pin(self, delta)
+        routes.append(pinned.table is not None)
+        return pinned
+
+    monkeypatch.setattr(BucketedParquetState, "pin", pin)
+
+    def run(name):
+        st = BucketedParquetState(
+            spark, str(tmp_path / name), ddl, key_col=("a", "b"), n_buckets=4
+        )
+        for ups, dels in _MERGES:
+            st.merge(
+                spark.createDataFrame(ups, ddl),
+                delete_keys=spark.createDataFrame(dels, "a string, b long"),
+            )
+        return sorted(((r.a, r.b, r.v) for r in st.read().collect()), key=repr)
+
+    small = run("small")
+    assert routes == [True] * len(_MERGES)
+    monkeypatch.setattr(BucketedParquetState, "_DRIVER_ROWS", 0)
+    routes.clear()
+    large = run("large")
+    assert routes == [False] * len(_MERGES)
+    assert small == large == _merge_model(_MERGES)
+    assert small == [("a", 1, 10), ("a", 1, 11), ("e", 5, 8), (None, 1, 30)]

@@ -291,3 +291,32 @@ def test_vector_sink_one_document_merge_rewrites_its_buckets(spark, tmp_path):
     rows = {r.chunk_id: r.embedding for r in sink.read().collect()}
     assert len(rows) == 120
     assert rows["7-1"] == [1.0, 1.0] and rows["8-1"] == [0.0, 1.0]
+
+
+def test_vector_sink_merge_runs_its_upstream_once(spark, tmp_path):
+    """``VectorSink.merge`` checks the dims on the rows its pin has
+    evaluated, so a 120-row upstream runs its embedding UDF 120 times,
+    as under ``TableSink.merge``, not once more for the check."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def embed(i):
+        seen.add(1)
+        return [float(i), 1.0]
+
+    ddl = "chunk_id string, doc_id long, embedding array<float>"
+    rows = spark.range(120).select(
+        F.col("id").cast("string").alias("chunk_id"),
+        F.col("id").alias("doc_id"),
+        F.udf(embed, "array<float>")("id").alias("embedding"),
+    )
+    sink = sinks.VectorSink(
+        spark, str(tmp_path / "v"), ["chunk_id"], ddl, {"embedding": 2}
+    )
+    sink.merge(rows)
+    assert seen.value == 120
+    assert sink.read().count() == 120
+    with pytest.raises(ValueError, match="dim=3"):
+        sinks.VectorSink(
+            spark, str(tmp_path / "v3"), ["chunk_id"], ddl, {"embedding": 3}
+        ).merge(rows)
+    assert seen.value == 240

@@ -24,9 +24,3 @@ def ts_us(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_micros(c.cast("timestamp"))
-
-
-def as_timestamp(col: Column | str) -> Column:
-    """Session-tz TIMESTAMP view of a TIMESTAMP/TIMESTAMP_NTZ column."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("timestamp")

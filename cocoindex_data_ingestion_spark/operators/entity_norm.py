@@ -293,8 +293,3 @@ def canonicalize_relationship_type_sql(value: str) -> str:
         f"WHEN {sanitized} IN ({canon}) THEN {sanitized} "
         f"ELSE {_sql_quote(DEFAULT_RELATIONSHIP_TYPE)} END"
     )
-
-
-def normalize_for_alignment_sql(col: str) -> str:
-    dashes = _DASH_CHARS + _NBSP
-    return f"translate({col}, {_sql_quote(dashes)}, '------ ')"

@@ -84,62 +84,6 @@ def n_hop_frontier(
         edges.unpersist()
 
 
-def entity_search(
-    nodes: DataFrame,
-    name_contains: str | None = None,
-    type_eq: str | None = None,
-    limit: int = 100,
-    name_col: str = "name",
-    type_col: str = "type",
-) -> DataFrame:
-    """Reference ``search_entities`` (neo4j_service.py:490-542):
-    CONTAINS/type filter, order by name, limit."""
-    out = nodes
-    if name_contains is not None:
-        out = out.filter(F.lower(F.col(name_col)).contains(name_contains.lower()))
-    if type_eq is not None:
-        out = out.filter(F.col(type_col) == type_eq)
-    return out.orderBy(F.col(name_col).asc()).limit(limit)
-
-
-def merge_duplicate_nodes(
-    nodes: DataFrame,
-    edges: DataFrame,
-    key_cols: list[str],
-    id_col: str = "id",
-) -> tuple[DataFrame, DataFrame]:
-    """Graph duplicate-merge (neo4j_service.py:353-427): nodes with
-    equal key columns collapse into the min-id survivor; edges are
-    re-pointed and deduplicated.
-
-    Returns (merged_nodes, merged_edges). Two joins re-point edge
-    endpoints via the (old_id → survivor_id) mapping, which is
-    dimension-sized → broadcast."""
-    survivors = nodes.groupBy(*key_cols).agg(F.min(id_col).alias("survivor_id"))
-    mapping = nodes.join(survivors, key_cols).select(
-        F.col(id_col).alias("old_id"), "survivor_id"
-    )
-    merged_nodes = nodes.join(
-        mapping.filter(F.col("old_id") == F.col("survivor_id")).select(
-            F.col("old_id").alias(id_col)
-        ),
-        id_col,
-        "left_semi",
-    )
-    m = F.broadcast(mapping)
-    merged_edges = (
-        edges.join(m.withColumnRenamed("old_id", "src"), "src")
-        .withColumn("src", F.col("survivor_id"))
-        .drop("survivor_id")
-        .join(m.withColumnRenamed("old_id", "dst"), "dst")
-        .withColumn("dst", F.col("survivor_id"))
-        .drop("survivor_id")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    return merged_nodes, merged_edges
-
-
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,

@@ -279,19 +279,3 @@ def video_frame_sample_stage(
     return spread_python_stage(
         df.select(id_col, binary_col), id_col
     ).mapInPandas(run, schema)
-
-
-def searchable_text(
-    ocr_col: str = "ocr_text", caption_col: str = "caption", labels_col: str = "labels"
-) -> F.Column:
-    """Compose image searchable text 'OCR: .. Caption: .. Labels: ..'
-    (image_intelligence_service.py:25-160 output shape)."""
-    return F.concat_ws(
-        " ",
-        F.concat(F.lit("OCR: "), F.coalesce(F.col(ocr_col), F.lit(""))),
-        F.concat(F.lit("Caption: "), F.coalesce(F.col(caption_col), F.lit(""))),
-        F.concat(
-            F.lit("Labels: "),
-            F.coalesce(F.concat_ws(", ", F.col(labels_col)), F.lit("")),
-        ),
-    )

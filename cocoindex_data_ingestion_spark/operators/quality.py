@@ -25,7 +25,7 @@ per metric family.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cocoindex_data_ingestion_spark.functions.compare import (
@@ -175,15 +175,6 @@ def unigram_logprob(
             stable_avg(F.col("nll"), 4).alias("avg_nll"),
         )
     )
-
-
-def quality_funnel(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Convenience predicate: repetition keep-flag as a join-able
-    filter (compose with curation.resolve_duplicates /
-    decontaminate for the full corpus funnel)."""
-    return repetition_profile(docs, id_col, text_col).filter("keep").select(id_col)
 
 
 BIGRAM_LAMBDA = 0.8  # interpolation weight on the bigram MLE

@@ -9,6 +9,7 @@ the pandas-UDF slow path).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -41,13 +42,26 @@ def get_spark(
       task from re-reading ``pyspark.zip`` (a no-op on Python 3.13+).
       Workers must be able to import this package, as they already
       must for its UDFs.
+    - ``spark.sql.streaming.checkpointFileManagerClass`` — on a
+      ``local`` / ``local[...]`` master only (``checkpoint_conf``),
+      Spark's FileSystem-based checkpoint manager. Every micro-batch
+      writes a source-log, an offset-WAL and a commit file plus each
+      state store's changelog. Without ``libhadoop``, the default
+      FileContext manager forks ``stat`` on each rename and ``chmod``
+      for each file and its ``.crc``: one 200-byte atomic write spawned
+      20 processes and took 34-52 ms, against 4 and 9-12 ms through
+      the FileSystem manager (4-vCPU VM). On ``file:`` paths both rename
+      with ``rename(2)`` and keep the ``.crc`` sidecars and Spark's
+      checkpoint checksums. Other masters keep the default: on HDFS
+      the FileSystem manager's overwrite-if-possible rename silently
+      keeps an existing file.
 
     ``extra_conf`` is applied last and overrides any of these.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
@@ -119,11 +133,27 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", f"{__package__}.pydaemon")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**checkpoint_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def checkpoint_conf(master: str) -> dict[str, str]:
+    """The streaming checkpoint manager ``get_spark`` sets for
+    ``master``: Spark's FileSystem-based manager on ``local`` and
+    ``local[...]`` masters, nothing (Spark's default) on any other."""
+    if re.fullmatch(r"local(\[[^\]]*\])?", master):
+        return {_CHECKPOINT_MANAGER_KEY: _FS_CHECKPOINT_MANAGER}
+    return {}
 
 
 def default_driver_memory() -> str:

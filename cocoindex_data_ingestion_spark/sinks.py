@@ -24,6 +24,7 @@ deletes, orphan GC) is the part the reference implements per-target in
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -72,7 +73,10 @@ class VectorSink(TableSink):
     over it is operators.vector_search.knn. Collection metadata
     (dim, distance) is validated on merge, on the rows ``pin`` has
     already evaluated, so an expensive upstream (chunking, embedding)
-    runs once: the merge then pins a ``LocalRelation``."""
+    runs once: the merge then pins a ``LocalRelation``. The dims are
+    checked on the Arrow table ``pin`` collected, without a Spark job,
+    or on the pinned frame when the rows were too many to collect.
+    A NULL vector passes."""
 
     def __init__(self, spark: SparkSession, path: str, key_cols: list[str],
                  schema_ddl: str, vector_cols: dict[str, int]):
@@ -80,14 +84,18 @@ class VectorSink(TableSink):
         self.vector_cols = vector_cols
 
     def merge(self, rows: DataFrame) -> None:
-        rows = self.state.pin(rows).df
+        pinned = self.state.pin(rows)
         for col, dim in self.vector_cols.items():
-            bad = rows.filter(
-                F.col(col).isNotNull() & (F.size(F.col(col)) != dim)
-            ).limit(1).count()
+            if pinned.table is not None:
+                lengths = pc.list_value_length(pinned.table.column(col))
+                bad = pc.any(pc.not_equal(lengths, dim)).as_py()
+            else:
+                bad = pinned.df.filter(
+                    F.col(col).isNotNull() & (F.size(F.col(col)) != dim)
+                ).limit(1).count()
             if bad:
                 raise ValueError(f"vector column '{col}' violates dim={dim}")
-        super().merge(rows)
+        super().merge(pinned.df)
 
 
 class GraphSink:
@@ -198,25 +206,6 @@ class GraphSink:
         removed = nodes.count() - keep.count()
         self.nodes.overwrite(keep)
         return removed
-
-
-def jdbc_upsert_writer(url: str, table: str, key_cols: list[str],
-                       batchsize: int = 1000):
-    """foreachBatch sink for real JDBC targets (chunked batched
-    upsert, the reference's BIND_LIMIT chunking postgres.rs:227-266).
-    Import-guarded: requires a JDBC driver on the classpath."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.format("jdbc")
-            .option("url", url)
-            .option("dbtable", table)
-            .option("batchsize", str(batchsize))
-            .mode("append")
-            .save()
-        )
-
-    return _sink
 
 
 # -- custom target connector (cocoindex op.TargetSpec surface) ------------------

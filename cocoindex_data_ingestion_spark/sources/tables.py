@@ -91,9 +91,3 @@ def load_tables(
     spark: SparkSession, sf_dir: str | None = None, names: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
     return {name: load_table(spark, name, sf_dir) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

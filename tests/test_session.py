@@ -71,3 +71,69 @@ def test_extra_conf_restores_the_stock_daemon():
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.strip().splitlines()[-1] == "zipimport"
+
+
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing"
+
+
+def _checkpoint_manager(spark, path: str):
+    """The checkpoint manager a streaming query of ``spark`` would
+    build for ``path``."""
+    jvm = spark._jvm
+    return getattr(jvm, _CHECKPOINTING).CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+
+
+def test_local_session_checkpoints_through_the_filesystem_manager(spark, tmp_path):
+    """A ``local[...]`` session writes checkpoint files through Spark's
+    FileSystem-based manager, which still leaves a ``.crc`` sidecar
+    beside each file it writes."""
+    fm = _checkpoint_manager(spark, f"file://{tmp_path}")
+    assert fm.getClass().getName() == f"{_CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
+    out = fm.createAtomic(spark._jvm.org.apache.hadoop.fs.Path(f"file://{tmp_path}/0"), False)
+    out.write(bytearray(b"v1\n"))
+    out.close()
+    assert sorted(os.listdir(tmp_path)) == [".0.crc", "0"]
+    assert (tmp_path / "0").read_bytes() == b"v1\n"
+
+
+def test_extra_conf_restores_the_filecontext_manager(tmp_path):
+    code = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {os.path.join(REPO, "tests")!r})
+        from test_session import _CHECKPOINTING, _checkpoint_manager
+        from cocoindex_data_ingestion_spark.session import get_spark
+
+        spark = get_spark("filecontext_checkpoints", master="local[1]", shuffle_partitions=1,
+                          extra_conf={{"spark.sql.streaming.checkpointFileManagerClass":
+                                      _CHECKPOINTING + ".FileContextBasedCheckpointFileManager"}})
+        print(_checkpoint_manager(spark, "file://{tmp_path}").getClass().getSimpleName())
+        spark.stop()
+    """)
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True,
+        timeout=300, env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "512m"},
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == "FileContextBasedCheckpointFileManager"
+
+
+@pytest.mark.parametrize("master, local", [
+    ("local", True),
+    ("local[4]", True),
+    ("local[*]", True),
+    ("local[4,2]", True),
+    ("local-cluster[2,1,1024]", False),
+    ("spark://host:7077", False),
+    ("yarn", False),
+    ("k8s://https://host:443", False),
+])
+def test_only_local_masters_change_the_checkpoint_manager(master, local):
+    """Off a local master, where checkpoints may live on HDFS, Spark's
+    default manager stays: the FileSystem manager's rename there keeps
+    an existing file instead of overwriting it."""
+    want = ({"spark.sql.streaming.checkpointFileManagerClass":
+             f"{_CHECKPOINTING}.FileSystemBasedCheckpointFileManager"} if local else {})
+    assert session.checkpoint_conf(master) == want

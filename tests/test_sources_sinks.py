@@ -320,3 +320,29 @@ def test_vector_sink_merge_runs_its_upstream_once(spark, tmp_path):
             spark, str(tmp_path / "v3"), ["chunk_id"], ddl, {"embedding": 3}
         ).merge(rows)
     assert seen.value == 240
+
+
+def test_vector_sink_checks_dims_without_a_job(spark, spark_jobs, tmp_path):
+    """On rows its pin collected, ``VectorSink.merge`` checks the dims
+    on the Arrow table, so a warm 120-row merge runs one job more than
+    ``TableSink.merge`` of the same rows (the second pin), not two.
+    A NULL vector passes; a wrong dim after NULLs still fails."""
+    ddl = "chunk_id string, doc_id long, embedding array<float>"
+
+    def rows(v):
+        return spark.createDataFrame(
+            [(str(i), i, None if i % 7 == 0 else [float(v), 1.0]) for i in range(120)], ddl
+        )
+
+    vec = sinks.VectorSink(spark, str(tmp_path / "v"), ["chunk_id"], ddl, {"embedding": 2})
+    tab = sinks.TableSink(spark, str(tmp_path / "t"), ["chunk_id"], ddl)
+    vec.merge(rows(0))
+    tab.merge(rows(0))
+    vec_jobs = spark_jobs(lambda: vec.merge(rows(1)))[0]
+    tab_jobs = spark_jobs(lambda: tab.merge(rows(1)))[0]
+    assert vec_jobs <= tab_jobs + 1 and vec_jobs <= 6, (vec_jobs, tab_jobs)
+    got = {r.chunk_id: r.embedding for r in vec.read().collect()}
+    assert got["7"] is None and got["8"] == [1.0, 1.0]
+    bad = rows(1).union(spark.createDataFrame([("x", 0, [1.0])], ddl))
+    with pytest.raises(ValueError, match="dim=2"):
+        vec.merge(bad)
